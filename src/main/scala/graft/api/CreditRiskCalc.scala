@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 import graft.analysis.Reconciliation
 import graft.contracts.CalcError
 import graft.engine.DomainPipeline
+import graft.queries.Q.dsum
 import graft.reporting.{CellSpec, TemplateGenerator, XlsxWriter}
 import graft.sources.Sinks
 
@@ -19,11 +20,16 @@ import graft.sources.Sinks
   * so a user of the reference can drive the same lifecycle — configure →
   * calculate → export / reconcile-against-legacy — from Scala.
   *
-  * Results stay LAZY `DataFrame`s: `calculate()` validates inputs and
-  * composes the plan; nothing executes until the caller aggregates,
-  * collects, or exports — the Spark-first replacement for the reference's
-  * results-cache + `scan_results()` re-scan discipline
-  * (`api/service.py:145-187`, `api/results_cache.py`).
+  * `calculate()` validates inputs and builds the memoised, persisted
+  * ledger. That is not free: handing out the ledger's re-rooted leaf
+  * compiles its plan, and adaptive execution runs every shuffle stage of
+  * the build there (dozens of jobs). The final ledger stage runs, and the
+  * cache fills, on the first read. The summary stays lazy: it is persisted
+  * but computed only when first read, then served from the cache — the
+  * Spark-first replacement for the reference's results-cache +
+  * `scan_results()` re-scan discipline (`api/service.py:145-187`,
+  * `api/results_cache.py`). `framework` picks the regime the summary and
+  * `totalRwa` report: CRR sums `rwa`, BASEL_3_1 sums `rwa_b31`.
   */
 final case class CalcConfig(
     dataPath: String,
@@ -52,10 +58,11 @@ final case class CalculationResult(
     errors: Seq[CalcError]) {
 
   /** Portfolio total RWA — executes the plan (reference
-    * `response.summary.total_rwa`). */
+    * `response.summary.total_rwa`). The per-class totals are exact cents,
+    * so their decimal sum is the exact decimal sum of the ledger's RWA. */
   def totalRwa: Double = summary match {
     case Some(sm) =>
-      val r = sm.agg(sum(col("total_rwa"))).first()
+      val r = sm.agg(dsum(col("total_rwa"), 2)).first()
       if (r.isNullAt(0)) 0.0 else r.getDouble(0)
     case None => 0.0
   }
@@ -81,7 +88,8 @@ final class CreditRiskCalc(spark: SparkSession, config: CalcConfig) {
       return CalculationResult(success = false, config, None, None, errs)
     val irb = config.permissionMode == "irb"
     val led = DomainPipeline.ledger(spark, config.dataPath, irb)
-    val sm = DomainPipeline.summary(spark, config.dataPath, irb)
+    val sm = DomainPipeline.summary(spark, config.dataPath, irb,
+      b31 = config.framework == "BASEL_3_1")
     config.auditCacheDir.foreach { dir =>
       Sinks.writeAuditCache(Map("ledger" -> led, "summary" -> sm), dir)
     }

@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -30,13 +30,14 @@ import graft.queries.Q._
   * produce identical results.
   *
   * Scale shape: one scan of orders (exposure side), one scan of lineitem
-  * (CRM side); counterparty/rule joins broadcast; the only data-sized
-  * shuffles are the CRM item join + per-exposure waterfall window and the
-  * final summary — the plan that holds at 100 TB.
+  * (CRM side); counterparty joins broadcast and the constant rule tables
+  * are CASE expressions, not joins; the only data-sized shuffles are the
+  * CRM item join + per-exposure waterfall window and the final summary —
+  * the plan that holds at 100 TB.
   */
 object DomainPipeline {
 
-  // ---- regime-as-data (compiled to broadcast frames + when-chains AND
+  // ---- regime-as-data (compiled to CASE expressions by [[ruleCase]] AND
   //      to the oracle's VALUES clauses, so both engines share one source
   //      of truth; reference `rulebook/packs/*`) --------------------------
 
@@ -99,6 +100,18 @@ object DomainPipeline {
     ("sme_corporate", 4, 0.85), ("sme_corporate", 5, 1.0), ("sme_corporate", 6, 1.5),
     ("retail", 1, 0.45), ("retail", 2, 0.45), ("retail", 3, 0.75),
     ("retail", 4, 0.75), ("retail", 5, 0.75), ("retail", 6, 0.75))
+
+  /** A constant rule table compiled to one CASE expression: the value of
+    * the first row whose key `matches`, else `otherwise`. A null input
+    * matches no row, so with the default null `otherwise` the result is
+    * what a left join against the table on its key would give, without
+    * the join: no broadcast stage and no re-plan per table. */
+  private def ruleCase[K](rows: Seq[(K, Any)])(
+      matches: K => Column, otherwise: Column = lit(null)): Column =
+    rows.foldLeft(Option.empty[Column]) {
+      case (None, (k, v)) => Some(when(matches(k), v))
+      case (Some(acc), (k, v)) => Some(acc.when(matches(k), v))
+    }.fold(otherwise)(_.otherwise(otherwise))
 
   val sovereignCountries: Seq[String] =
     Seq("UNITED STATES", "GERMANY", "CHINA", "FRANCE", "JAPAN")
@@ -184,10 +197,7 @@ object DomainPipeline {
     val c = Tables.customer(s, dir)
     val n = Tables.nation(s, dir)
     val r = Tables.region(s, dir)
-    val sectorChain = sectorMap.foldLeft(Option.empty[org.apache.spark.sql.Column]) {
-      case (None, (seg, sec)) => Some(when(col("c_mktsegment") === seg, sec))
-      case (Some(acc), (seg, sec)) => Some(acc.when(col("c_mktsegment") === seg, sec))
-    }.get.otherwise("corporate")
+    val sector = ruleCase(sectorMap)(col("c_mktsegment") === _, lit("corporate"))
     val wRating = Window.partitionBy(col("counterparty_reference"))
       .orderBy(col("cqs"), col("rating_agency"))
     val best = ratings(s, dir)
@@ -200,7 +210,7 @@ object DomainPipeline {
         concat(lit("CP-"), col("c_custkey").cast("string")).as("counterparty_reference"),
         concat(lit("GRP-"), col("n_nationkey").cast("string")).as("parent_group"),
         col("n_nationkey").cast("int").as("country_key"),
-        sectorChain.as("sector"),
+        sector.as("sector"),
         col("n_name").as("country"),
         col("r_name").as("region_name"),
         (col("c_acctbal") * lit(10000.0)).as("turnover"))
@@ -235,15 +245,12 @@ object DomainPipeline {
   /** Collateral book: returned lineitems, typed off the part key. */
   def collateral(s: SparkSession, dir: String): DataFrame = {
     val li = Tables.lineitem(s, dir)
-    val typeChain = collTypeByMod.foldLeft(Option.empty[org.apache.spark.sql.Column]) {
-      case (None, (m, t)) => Some(when(col("l_partkey") % 5 === m, t))
-      case (Some(acc), (m, t)) => Some(acc.when(col("l_partkey") % 5 === m, t))
-    }.get.otherwise("other")
+    val collType = ruleCase(collTypeByMod)(col("l_partkey") % 5 === _, lit("other"))
     val df = li.filter(col("l_returnflag") === "R").select(
       concat(lit("COLL-"), col("l_orderkey").cast("string"), lit("-"),
         col("l_linenumber").cast("string")).as("collateral_reference"),
       concat(lit("ORD-"), col("l_orderkey").cast("string")).as("exposure_reference"),
-      typeChain.as("collateral_type"),
+      collType.as("collateral_type"),
       (col("l_extendedprice") * lit(0.5)).as("market_value"))
     collateralEdge.conform(df)
   }
@@ -293,20 +300,27 @@ object DomainPipeline {
   // ---- stage 2: enrich + FX -------------------------------------------
 
   /** Counterparty-attribute join + FX conversion to base currency
-    * (reference FX stage; `queries/Joins.scala:22` broadcast pattern). */
-  def enrichFx(exposures: DataFrame, cptys: DataFrame, s: SparkSession): DataFrame = {
-    import s.implicits._
-    val fx = broadcast(fxTable.toDF("region_name", "currency", "fx_rate"))
-    exposures
-      .join(broadcast(cptys), Seq("counterparty_reference"), "left")
-      .join(fx, Seq("region_name"), "left")
-      // one projection per independent batch: every withColumn call runs
-      // a FULL analyzer pass over the accumulated plan, and the ledger
-      // chain is deep enough that per-column calls dominate the cold
-      // driver cost (measured ~12 s of pure analysis at sf0.1)
-      .withColumns(Map(
-        "drawn_base" -> q2(col("drawn") * col("fx_rate")),
-        "undrawn_base" -> q2(col("undrawn") * col("fx_rate"))))
+    * (reference FX stage; `queries/Joins.scala:22` broadcast pattern). The
+    * region's currency and rate come from [[fxTable]] as CASE
+    * expressions. Column order is the ledger's published one:
+    * `region_name` first, `currency` and `fx_rate` after the counterparty
+    * columns. */
+  def enrichFx(exposures: DataFrame, cptys: DataFrame): DataFrame = {
+    val withCpty = exposures.join(broadcast(cptys), Seq("counterparty_reference"), "left")
+    def fx(v: ((String, String, Double)) => Any) =
+      ruleCase(fxTable.map(r => r._1 -> v(r)))(col("region_name") === _)
+    val rate = fx(_._3)
+    // one projection: every withColumn call runs a FULL analyzer pass
+    // over the accumulated plan, and the ledger chain is deep enough that
+    // per-column calls dominate the cold driver cost (measured ~12 s of
+    // pure analysis at sf0.1)
+    withCpty.select(
+      col("region_name") +:
+        withCpty.columns.filter(_ != "region_name").map(col) :+
+        fx(_._2).as("currency") :+
+        rate.as("fx_rate") :+
+        q2(col("drawn") * rate).as("drawn_base") :+
+        q2(col("undrawn") * rate).as("undrawn_base"): _*)
   }
 
   // ---- stage 3: hierarchy roll-ups + rating inheritance ----------------
@@ -382,9 +396,7 @@ object DomainPipeline {
     * BEFORE joining (one small shuffle each), the direct join shares the
     * exposure key, and the pro-rata window shuffles on the counterparty
     * key once. */
-  def eadCalc(c: DataFrame, prov: DataFrame, s: SparkSession): DataFrame = {
-    import s.implicits._
-    val ccf = broadcast(ccfTable.toDF("ccf_type", "ccf"))
+  def eadCalc(c: DataFrame, prov: DataFrame): DataFrame = {
     val provDirect = prov.filter(col("beneficiary_type") === "direct")
       .groupBy(col("beneficiary_reference").as("pd_ref"))
       .agg(dsum(col("amount"), 2).as("prov_direct"))
@@ -410,7 +422,11 @@ object DomainPipeline {
       when(isSa, least(
         greatest(provAlloc - provOnDrawn, lit(0.0)),
         col("undrawn_base"))).otherwise(0.0)
-    c.join(ccf, col("exposure_type") === col("ccf_type"), "left")
+    // ccf_type: the exposure type when [[ccfTable]] has it, else null
+    c.select(col("*"),
+        ruleCase(ccfTable.map { case (t, _) => t -> t })(col("exposure_type") === _)
+          .as("ccf_type"),
+        ruleCase(ccfTable)(col("exposure_type") === _).as("ccf"))
       .withColumns(Map(
         "ccf_eff" -> coalesce(col("ccf"), lit(1.0)),
         "ead_gross" ->
@@ -430,46 +446,35 @@ object DomainPipeline {
       .drop("prov_direct", "prov_cp", "cp_basis")
   }
 
-  /** Own SA risk weight: (class, cqs) decision table, broadcast. The
-    * defaulted book takes the CRR Art. 127 override in BOTH regimes:
-    * 100% when specific provisions reach 20% of the gross exposure value
-    * (the pre-deduction basis — the provision test is on the
-    * pre-adjustment value), else 150%. */
-  def ownRiskWeight(e: DataFrame, s: SparkSession): DataFrame = {
-    import s.implicits._
-    val rw = broadcast(rwTable.toDF("rw_class", "rw_cqs", "rw"))
-    val rwB31 = broadcast(rwTableB31.toDF("b31_class", "b31_cqs", "rw_b31x"))
+  /** Own SA risk weight: the (class, cqs) decision table as a CASE
+    * expression, unmatched pairs at 100%. The defaulted book takes the
+    * CRR Art. 127 override in BOTH regimes: 100% when specific provisions
+    * reach 20% of the gross exposure value (the pre-deduction basis — the
+    * provision test is on the pre-adjustment value), else 150%. */
+  def ownRiskWeight(e: DataFrame): DataFrame = {
     val defaultedRw =
       when(col("provision_allocated") >= col("ead_gross") * 0.2, 1.0).otherwise(1.5)
     val isDefaultedSa = col("is_defaulted") && col("approach") === "SA"
-    e.join(rw,
-        col("exposure_class") === col("rw_class") &&
-        col("effective_cqs") === col("rw_cqs"), "left")
-      .withColumn("own_rw",
-        when(isDefaultedSa, defaultedRw).otherwise(coalesce(col("rw"), lit(1.0))))
-      .drop("rw_class", "rw_cqs", "rw")
-      // shadow regime: the candidate rule-set's weight resolved in the
-      // SAME scan (the reference runs the pipeline once per framework and
-      // compares materialised runs — at scale, one pass computing both
-      // regimes dominates two full runs)
-      .join(rwB31,
-        col("exposure_class") === col("b31_class") &&
-        col("effective_cqs") === col("b31_cqs"), "left")
-      .withColumn("own_rw_b31",
-        when(isDefaultedSa, defaultedRw).otherwise(coalesce(col("rw_b31x"), lit(1.0))))
-      .drop("b31_class", "b31_cqs", "rw_b31x")
+    def weight(table: Seq[(String, Int, Double)]): Column =
+      when(isDefaultedSa, defaultedRw).otherwise(
+        ruleCase(table.map { case (c, q, w) => (c, q) -> w })(
+          { case (c, q) => col("exposure_class") === c && col("effective_cqs") === q },
+          lit(1.0)))
+    // shadow regime: the candidate rule-set's weight resolved in the
+    // SAME projection (the reference runs the pipeline once per framework
+    // and compares materialised runs — at scale, one pass computing both
+    // regimes dominates two full runs)
+    e.withColumns(Map(
+      "own_rw" -> weight(rwTable),
+      "own_rw_b31" -> weight(rwTableB31)))
   }
 
   // ---- stage 6: CRM waterfall -----------------------------------------
 
-  /** Guarantor risk weight = the institution row of the rw table, compiled
-    * to a when-chain off guarantor_cqs. */
-  private def guarantorRwChain(cqs: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    rwTable.filter(_._1 == "institution")
-      .foldLeft(Option.empty[org.apache.spark.sql.Column]) {
-        case (None, (_, q, w)) => Some(when(cqs === q, w))
-        case (Some(acc), (_, q, w)) => Some(acc.when(cqs === q, w))
-      }.get.otherwise(1.0)
+  /** Guarantor risk weight = the institution rows of the rw table, keyed
+    * by guarantor_cqs. */
+  private def guarantorRw(cqs: Column): Column =
+    ruleCase(rwTable.collect { case ("institution", q, w) => q -> w })(cqs === _, lit(1.0))
 
   /** The composed CRM kernel (reference `engine/crm/processor.py:228-443`,
     * `engine/kernels/allocation.py`, `crm/guarantees.py:1419-1480`):
@@ -478,10 +483,7 @@ object DomainPipeline {
     * ordered cumulative-sum window — never exceeding EAD — then collapsed
     * back to exposure grain with covered/uncovered conservation.
     */
-  def crmWaterfall(
-      withRw0: DataFrame, coll: DataFrame, guar: DataFrame,
-      s: SparkSession): DataFrame = {
-    import s.implicits._
+  def crmWaterfall(withRw0: DataFrame, coll: DataFrame, guar: DataFrame): DataFrame = {
     // This frame is consumed THREE times in one plan: the exposure spine
     // plus the collateral-item and guarantee-item EAD lookups. Catalyst
     // does not CSE across join branches, so without materialisation the
@@ -494,7 +496,7 @@ object DomainPipeline {
     // 6.0s → ~2.5s, q106 6.1s → ~2s.
     val withRw = withRw0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     pendingEdges.get += withRw
-    val haircuts = broadcast(haircutTable.toDF("hc_type", "haircut"))
+    val haircut = ruleCase(haircutTable)(col("collateral_type") === _, lit(0.40))
     val exposureSide = withRw.select(
       col("exposure_reference"), col("fx_rate"), col("ead_pre_crm"))
     // One unified item book, ONE join to the exposure side. A union of
@@ -519,7 +521,6 @@ object DomainPipeline {
         col("guarantor_cqs"),
         col("coverage_pct")))
     val items = rawItems
-      .join(haircuts, col("collateral_type") === col("hc_type"), "left")
       .join(exposureSide, Seq("exposure_reference"))
       .select(
         col("exposure_reference"),
@@ -527,10 +528,9 @@ object DomainPipeline {
         col("item_ref"),
         col("collateral_type"),
         when(col("priority") === 1,
-          q2(col("market_value") * col("fx_rate") *
-            (lit(1.0) - coalesce(col("haircut"), lit(0.40)))))
+          q2(col("market_value") * col("fx_rate") * (lit(1.0) - haircut)))
           .otherwise(q2(col("coverage_pct") * col("ead_pre_crm"))).as("amount"),
-        when(col("priority") === 2, guarantorRwChain(col("guarantor_cqs")))
+        when(col("priority") === 2, guarantorRw(col("guarantor_cqs")))
           .cast("double").as("guarantor_rw"),
         col("ead_pre_crm"))
     // TOTAL order: the synthetic books can carry duplicate item
@@ -667,8 +667,45 @@ object DomainPipeline {
     * persist entries did not unify, re-paying the full CRM fill per query
     * (~1.4 s × 8 at sf0.1). Returning the SAME DataFrame object guarantees
     * cache-hit by identity rather than relying on canonical-plan matching. */
-  private val ledgerMemo = scala.collection.concurrent.TrieMap[
-    (SparkSession, String, Boolean), (DataFrame, DataFrame, Seq[DataFrame])]()
+  private val ledgerMemo =
+    scala.collection.concurrent.TrieMap[(SparkSession, String, Boolean), Memo]()
+
+  /** One memoised ledger: the PERSISTED build handle (its storageLevel is
+    * the liveness check, and releaseLedger unpersists it), the stage edges
+    * its build persisted, the re-rooted leaf consumers receive, and the
+    * summaries computed over that leaf, keyed by regime (`b31`). The
+    * summaries live and die with the entry. */
+  private final class Memo(val persisted: DataFrame, val edges: Seq[DataFrame]) {
+    // RE-ROOT before handing out: consumers receive a LogicalRDD leaf
+    // over the persisted plan's compiled RDD, not the ~300-node ledger
+    // subtree itself. Persisting dedups EXECUTION but not PLAN size —
+    // every consumer branch (q86's 4-way diamond, 20+ reporting sheets)
+    // re-analyzes and re-canonicalises the full subtree per action, which
+    // is pure single-threaded driver work that grows with ledger width ×
+    // consumer count (the q75 disease, same cure as connectedComponents).
+    // Measured: q86 9.5 s → ~1 s at sf0.1. The leaf scans the cached
+    // blocks as internal rows, with no Row round-trip. Compiling its RDD
+    // is NOT lazy: adaptive execution runs every shuffle stage of the
+    // build here (the first call to `ledger` pays them); the cache itself
+    // fills on the first read. Lazy, so that work runs outside buildLock.
+    lazy val rooted: DataFrame = GraftBridge.reroot(persisted)
+
+    // guarded by buildLock
+    private val summaries = scala.collection.mutable.Map.empty[Boolean, DataFrame]
+    private var released = false
+
+    /** The memoised summary; a released entry (a concurrent release won
+      * the race) hands out an unmemoised one rather than leak a persist. */
+    def summary(b31: Boolean): DataFrame =
+      if (released) summarise(rooted, b31)
+      else summaries.getOrElseUpdate(b31,
+        summarise(rooted, b31).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+
+    def release(): Unit = {
+      released = true
+      (persisted +: edges ++: summaries.values.toSeq).foreach(_.unpersist(false))
+    }
+  }
 
   /** Stage edges persisted during the in-flight ledger build (crmWaterfall
     * registers its CRM edge here; `ledger` drains the buffer into the memo
@@ -691,49 +728,42 @@ object DomainPipeline {
     * QueryExecution still references the evicted InMemoryRelation, and
     * downstream consumers then re-execute the whole unpersisted chain
     * per join branch (measured: q86 6.5 s → 12 s round-over-round). */
-  def ledger(s: SparkSession, dir: String, irbMode: Boolean = true): DataFrame = {
+  def ledger(s: SparkSession, dir: String, irbMode: Boolean = true): DataFrame =
+    memo(s, dir, irbMode).rooted
+
+  /** The live memo entry for the key, built if absent or evicted; a stale
+    * entry is released (its edges and summaries with it). */
+  private def memo(s: SparkSession, dir: String, irbMode: Boolean): Memo = {
     val key = (s, dir, irbMode)
-    def live: Option[DataFrame] = ledgerMemo.get(key)
-      .filter(_._1.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
-      .map(_._2)
     // Check-then-act must be atomic and edge registration must be
     // attributable to exactly one build: the REST server executes
     // requests on a thread pool, so two concurrent consumers of the same
     // (or a different) key would otherwise interleave — one build's CRM
     // stage edge cleared by, or drained into, the other's memo entry,
     // leaving releaseLedger to unpersist a live run's edge or leak the
-    // loser's. Builds are plan construction only (no Spark action:
-    // persist() is lazy), so serialising them is microseconds — the lock
-    // is never held across an executor round-trip.
+    // loser's. Building the entry is plan construction only (persist()
+    // is lazy, and the re-root runs later, outside the lock), so
+    // serialising it is cheap — the lock is never held across an
+    // executor round-trip.
     buildLock.synchronized {
-      live.getOrElse {
-        pendingEdges.get.clear()
-        val df = buildLedger(s, dir, irbMode)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // RE-ROOT before handing out: consumers receive a LogicalRDD leaf
-        // over the persisted plan's compiled RDD, not the ~300-node ledger
-        // subtree itself. Persisting dedups EXECUTION but not PLAN size —
-        // every consumer branch (q86's 4-way diamond, 20+ reporting
-        // sheets) re-analyzes and re-canonicalises the full subtree per
-        // action, which is pure single-threaded driver work that grows
-        // with ledger width × consumer count (the q75 disease, same cure:
-        // `Dedup.reroot`). Measured: q86 9.5 s → ~1 s at sf0.1. `df.rdd`
-        // is lazy (no job) but plans through the CacheManager, so the
-        // RDD scans the InMemoryRelation and all consumers share the
-        // cached blocks. The PERSISTED handle (not the rooted leaf, whose
-        // storageLevel is always NONE) stays in the memo for the
-        // liveness check and releaseLedger.
-        val rooted = s.createDataFrame(df.rdd, df.schema)
-        val edges = pendingEdges.get.toList
-        pendingEdges.get.clear()
-        ledgerMemo.put(key, (df, rooted, edges))
-        rooted
-      }
+      ledgerMemo.get(key)
+        .filter(_.persisted.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+        .getOrElse {
+          ledgerMemo.get(key).foreach(_.release())
+          pendingEdges.get.clear()
+          val df = buildLedger(s, dir, irbMode)
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          val entry = new Memo(df, pendingEdges.get.toList)
+          pendingEdges.get.clear()
+          ledgerMemo.put(key, entry)
+          entry
+        }
     }
   }
 
-  /** Serialises ledger builds: guards the memo check-then-act AND scopes
-    * `pendingEdges` to the single in-flight build. */
+  /** Serialises memo-entry builds: guards the memo check-then-act, scopes
+    * `pendingEdges` to the single in-flight build, and guards each entry's
+    * summaries. */
   private val buildLock = new Object
 
   /** Test hook: the PERSISTED (un-rooted) ledger handle, if memoised —
@@ -743,18 +773,15 @@ object DomainPipeline {
     * plan-shape promises inspect it here. */
   private[graft] def persistedHandle(
       s: SparkSession, dir: String, irbMode: Boolean = true): Option[DataFrame] =
-    ledgerMemo.get((s, dir, irbMode)).map(_._1)
+    ledgerMemo.get((s, dir, irbMode)).map(_.persisted)
 
   /** Release one memoised ledger edge: drop the memo entry and unpersist
-    * the ledger AND the stage edges its build persisted (the CRM
-    * waterfall's materialised input). Long-lived callers (the REST run
-    * store) call this on eviction so the Spark cache does not grow
+    * the ledger, the stage edges its build persisted (the CRM waterfall's
+    * materialised input) and its summaries. Long-lived callers (the REST
+    * run store) call this on eviction so the Spark cache does not grow
     * without bound; `unpersist` on an already-evicted frame is a no-op. */
   def releaseLedger(s: SparkSession, dir: String, irbMode: Boolean = true): Unit =
-    ledgerMemo.remove((s, dir, irbMode)).foreach { case (df, _, edges) =>
-      df.unpersist(false)
-      edges.foreach(_.unpersist(false))
-    }
+    buildLock.synchronized(ledgerMemo.remove((s, dir, irbMode)).foreach(_.release()))
 
   /** Probe hook: the un-memoised composed plan (no persist, no re-root). */
   private[graft] def rawLedgerPlan(
@@ -771,39 +798,51 @@ object DomainPipeline {
       }
     val exp = t("exposuresUnified")(exposuresUnified(s, dir))
     val cpty = t("counterparties")(counterparties(s, dir))
-    val enriched = t("enrichFx")(enrichFx(exp, cpty, s))
+    val enriched = t("enrichFx")(enrichFx(exp, cpty))
     val h = t("hierarchy")(hierarchy(enriched))
     val cls = t("classify")(classify(h, modelPermissions(s, dir), irbMode))
-    val ead = t("eadCalc")(eadCalc(cls, provisions(s, dir), s))
-    val withRw = t("ownRiskWeight")(ownRiskWeight(ead, s))
-    val crm = t("crmWaterfall")(crmWaterfall(withRw, collateral(s, dir), guarantees(s, dir), s))
+    val ead = t("eadCalc")(eadCalc(cls, provisions(s, dir)))
+    val withRw = t("ownRiskWeight")(ownRiskWeight(ead))
+    val crm = t("crmWaterfall")(crmWaterfall(withRw, collateral(s, dir), guarantees(s, dir)))
     t("rwaCalc+audit")(auditColumns(rwaCalc(crm)))
   }
 
-  /** The (class, approach) roll-up of a ledger frame — shared by the lazy
-    * and staged execution modes so both emit the identical summary. */
-  private def summarise(led: DataFrame): DataFrame = {
-    val perClass = led.groupBy(col("exposure_class"), col("approach")).agg(
-      count(lit(1)).as("n_exposures"),
-      dsum(col("ead_pre_crm"), 2).as("total_ead"),
-      dsum(col("coll_covered"), 2).as("collateral_covered"),
-      dsum(col("guar_covered"), 2).as("guarantee_covered"),
-      dsum(col("unsecured"), 2).as("unsecured_ead"),
-      dsum(col("provision_deducted"), 2).as("provisions_deducted"),
-      dsum(col("rwa"), 2).as("total_rwa"))
-    val totals = led.agg(dsum(col("rwa"), 2).as("portfolio_rwa"))
-    perClass.crossJoin(broadcast(totals))
+  /** The (class, approach) roll-up of a ledger frame with portfolio
+    * shares — q90's output, shared by the lazy and staged execution modes
+    * so both emit the identical summary. `b31` sums the candidate regime's
+    * `rwa_b31` instead of the CRR `rwa`. One aggregation scans the ledger;
+    * the portfolio total is the sum of the exact per-class DECIMAL(38,2)
+    * RWA sums over an unpartitioned window (a handful of rows) — the same
+    * decimal as one global sum over the ledger, without a second scan. */
+  def summarise(led: DataFrame, b31: Boolean = false): DataFrame = {
+    val rwa = col(if (b31) "rwa_b31" else "rwa").cast(DecimalType(38, 2))
+    val classRwa = col("class_rwa").cast("double")
+    led.groupBy(col("exposure_class"), col("approach")).agg(
+        count(lit(1)).as("n_exposures"),
+        dsum(col("ead_pre_crm"), 2).as("total_ead"),
+        dsum(col("coll_covered"), 2).as("collateral_covered"),
+        dsum(col("guar_covered"), 2).as("guarantee_covered"),
+        dsum(col("unsecured"), 2).as("unsecured_ead"),
+        dsum(col("provision_deducted"), 2).as("provisions_deducted"),
+        sum(rwa).as("class_rwa"))
       .select(
         col("exposure_class"), col("approach"), col("n_exposures"),
         col("total_ead"), col("collateral_covered"), col("guarantee_covered"),
-        col("unsecured_ead"), col("provisions_deducted"), col("total_rwa"),
-        q6(col("total_rwa") / col("portfolio_rwa")).as("rwa_share"))
+        col("unsecured_ead"), col("provisions_deducted"), classRwa.as("total_rwa"),
+        q6(classRwa / sum(col("class_rwa")).over().cast("double")).as("rwa_share"))
       .orderBy(col("exposure_class"), col("approach"))
   }
 
-  /** The (class, approach) summary with portfolio shares — q90's output. */
-  def summary(s: SparkSession, dir: String, irbMode: Boolean = true): DataFrame =
-    summarise(ledger(s, dir, irbMode))
+  /** [[summarise]] over the memoised ledger, computed at most once per
+    * memo entry: memoised beside the ledger and dropped with it, persisted
+    * lazily (nothing runs until the first read, so a caller that never
+    * reads it pays nothing). */
+  def summary(
+      s: SparkSession, dir: String, irbMode: Boolean = true, b31: Boolean = false): DataFrame = {
+    val m = memo(s, dir, irbMode)
+    m.rooted // the re-root's shuffle stages run outside the lock
+    buildLock.synchronized(m.summary(b31))
+  }
 
   /** The same pipeline as Orchestrator stages with materialised edges —
     * execution-mode parity is asserted by DomainPipelineSpec. */
@@ -816,7 +855,7 @@ object DomainPipeline {
       new Stage {
         def name = "load_enrich"
         def run(ctx: PipelineContext) = ctx.put(kEnriched,
-          enrichFx(exposuresUnified(s, dir), counterparties(s, dir), s))
+          enrichFx(exposuresUnified(s, dir), counterparties(s, dir)))
         override def edgeFrames = Seq(kEnriched)
       },
       new Stage {
@@ -829,10 +868,10 @@ object DomainPipeline {
       new Stage {
         def name = "calc_crm_rwa"
         def run(ctx: PipelineContext) = {
-          val withRw = ownRiskWeight(eadCalc(ctx.get(kClassified), provisions(s, dir), s), s)
+          val withRw = ownRiskWeight(eadCalc(ctx.get(kClassified), provisions(s, dir)))
           ctx.put(kLedger,
             auditColumns(rwaCalc(
-              crmWaterfall(withRw, collateral(s, dir), guarantees(s, dir), s))))
+              crmWaterfall(withRw, collateral(s, dir), guarantees(s, dir)))))
         }
         override def edgeFrames = Seq(kLedger)
       },

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.hashfns
@@ -421,9 +421,9 @@ object Dedup {
     // cache entry leaks until an external clearCache.
     //
     // LINEAGE TRUNCATION (the round-8 q75 regression fix): each round's
-    // frame must be re-rooted as a fresh leaf (`createDataFrame` over the
-    // cached frame's RDD → a LogicalRDD scan) before the next round
-    // builds on it. Without this the analyzed plan embeds the previous
+    // frame must be re-rooted as a fresh leaf (`GraftBridge.reroot`: a
+    // LogicalRDD scan over the cached frame's compiled RDD) before the
+    // next round builds on it. Without this the analyzed plan embeds the previous
     // round's plan at every reference — 4 references per round with the
     // doubling hop — and per-action DRIVER work (analysis, dedup-clone of
     // the self-join branch, canonicalisation for cache lookup) grows
@@ -431,9 +431,7 @@ object Dedup {
     // with every input fully cached, 2.7s → 29s for q75 overall. With
     // truncation every round plans over two constant-size leaves, the
     // same shape a 1000-round run would have at 100 TB.
-    def reroot(df: DataFrame): DataFrame =
-      pairs.sparkSession.createDataFrame(df.rdd, df.schema)
-    var labels = reroot(seed)
+    var labels = GraftBridge.reroot(seed)
     var persistedGen = seed
 
     var round = 0
@@ -476,7 +474,7 @@ object Dedup {
       converged = next.filter(col("cc_moved")).count() == 0
       // re-root BEFORE dropping the old generations: the new leaf's RDD
       // is resolved against the live cache entry of `next`
-      labels = reroot(next.drop("cc_moved"))
+      labels = GraftBridge.reroot(next.drop("cc_moved"))
       stepped.unpersist(false)
       persistedGen.unpersist(false)
       persistedGen = next

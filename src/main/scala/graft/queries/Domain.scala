@@ -276,13 +276,16 @@ object Domain {
                        ${sql2("rwa_pre_sf_b31 * sf_factor")} AS rwa_b31 FROM sfd)""".stripMargin.trim
 
   /** q90: the composed flagship. Single plan: orders scanned for the
-    * exposure side, lineitem for the CRM book; counterparty + rule joins
-    * broadcast; the CRM item join, the per-exposure waterfall window, and
-    * the final summary are the only data-sized shuffles.
+    * exposure side, lineitem for the CRM book; counterparty joins
+    * broadcast, rule tables are CASE expressions; the CRM item join, the
+    * per-exposure waterfall window, and the final summary are the only
+    * data-sized shuffles. The summary is planned afresh over the memoised
+    * ledger on each call (not the API's memoised summary), so every run
+    * of q90 aggregates the ledger.
     */
   val q90DomainPipeline = QueryDef(
     "q90_domain_pipeline",
-    (s, dir) => DomainPipeline.summary(s, dir),
+    (s, dir) => DomainPipeline.summarise(DomainPipeline.ledger(s, dir)),
     Some(s"""
       WITH $domainLedgerCtes,
       summary AS (
@@ -2270,8 +2273,10 @@ object Domain {
     * come out 'pass' with a bit-identical delta. */
   val q115Tieouts = QueryDef(
     "q115_tieouts",
-    (s, dir) => graft.reporting.Tieouts.fromLedger(
-      DomainPipeline.ledger(s, dir), DomainPipeline.summary(s, dir)),
+    (s, dir) => {
+      val led = DomainPipeline.ledger(s, dir)
+      graft.reporting.Tieouts.fromLedger(led, DomainPipeline.summarise(led))
+    },
     Some {
       val ncValues = graft.reporting.Tieouts.nonComparable
         .map { case (id, note) => s"('$id', '${note.replace("'", "''")}')" }
@@ -3292,12 +3297,12 @@ object Domain {
             .unionByName(cpty
               .select(col("counterparty_reference").as("beneficiary_reference"))),
           Seq("beneficiary_reference"), "semi")
-      val enriched = DomainPipeline.enrichFx(exp, cpty, s)
+      val enriched = DomainPipeline.enrichFx(exp, cpty)
       val h = DomainPipeline.hierarchy(enriched)
       val cls = DomainPipeline.classify(h, DomainPipeline.modelPermissions(s, dir))
-      val ead = DomainPipeline.eadCalc(cls, prov, s)
-      val withRw = DomainPipeline.ownRiskWeight(ead, s)
-      val crm = DomainPipeline.crmWaterfall(withRw, coll, guar, s)
+      val ead = DomainPipeline.eadCalc(cls, prov)
+      val withRw = DomainPipeline.ownRiskWeight(ead)
+      val crm = DomainPipeline.crmWaterfall(withRw, coll, guar)
       val led = DomainPipeline.rwaCalc(crm)
       led.groupBy(col("exposure_class"), col("approach"))
         .agg(

@@ -1,13 +1,14 @@
-/* Bridge into Spark's private[sql] Column↔Expression converters.
- * Lives in org.apache.spark.sql purely for access; contains no logic.
- * This is the standard technique for third-party Catalyst expression
- * libraries targeting classic Spark 4.x, where Column is backed by
- * ColumnNode and the converters live in private[sql] ExpressionUtils.
+/* Bridge into Spark's private[sql] Column↔Expression converters and the
+ * package-private Dataset factory. Lives in org.apache.spark.sql purely
+ * for access. This is the standard technique for third-party Catalyst
+ * expression libraries targeting classic Spark 4.x, where Column is backed
+ * by ColumnNode and the converters live in private[sql] ExpressionUtils.
  */
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.LogicalRDD
 
 object GraftBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -23,5 +24,20 @@ object GraftBridge {
       Some((so.sortDirection == internal.SortOrder.Ascending,
         so.nullOrdering == internal.SortOrder.NullsFirst))
     case _ => None
+  }
+
+  /** `df` as a fresh leaf: a LogicalRDD over the internal-row RDD its
+    * QueryExecution compiles to, so later plans analyse a constant-size
+    * leaf instead of `df`'s whole subtree. Rows stay internal: unlike
+    * `createDataFrame(df.rdd, df.schema)` nothing converts them to
+    * external `Row`s and back. When `df` is persisted the RDD scans its
+    * cached blocks. Compiling the RDD is not free: under adaptive
+    * execution it runs every shuffle stage of the plan (for a persisted
+    * `df`, of the plan that fills the cache); only the final stage waits
+    * for the first read. */
+  def reroot(df: DataFrame): DataFrame = {
+    val s = df.sparkSession.asInstanceOf[classic.SparkSession]
+    val qe = df.queryExecution
+    classic.Dataset.ofRows(s, LogicalRDD(qe.analyzed.output, qe.toRdd)(s))
   }
 }

@@ -109,6 +109,18 @@ class ApiSpec extends SparkSpec {
       "IRB rows still track allocated provisions for the EL summary")
   }
 
+  test("BASEL_3_1 reports the exact rwa_b31 total, CRR the exact rwa total") {
+    def run(framework: String) = new CreditRiskCalc(spark,
+      CalcConfig(dataPath = sfDir, framework = framework)).calculate()
+    def exact(r: CalculationResult, c: String): Double =
+      r.ledger.get.agg(sum(col(c).cast("decimal(38,2)"))).first()
+        .getDecimal(0).doubleValue
+    val (crr, b31) = (run("CRR"), run("BASEL_3_1"))
+    assert(b31.totalRwa == exact(b31, "rwa_b31"))
+    assert(crr.totalRwa == exact(crr, "rwa"))
+    assert(b31.totalRwa != crr.totalRwa)
+  }
+
   test("invalid config values are rejected at construction") {
     assertThrows[IllegalArgumentException](CalcConfig(sfDir, framework = "B2"))
     assertThrows[IllegalArgumentException](CalcConfig(sfDir, permissionMode = "auto"))

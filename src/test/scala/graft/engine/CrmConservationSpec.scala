@@ -67,8 +67,7 @@ class CrmConservationSpec extends SparkSpec {
       val (expos, colls, guars) = bookGen(200)
         .apply(Gen.Parameters.default, Seed(seed)).get
       val expoDf = expos.toDF()
-      val ledger = DomainPipeline.crmWaterfall(
-        expoDf, colls.toDF(), guars.toDF(), spark)
+      val ledger = DomainPipeline.crmWaterfall(expoDf, colls.toDF(), guars.toDF())
       val rows = ledger.select(
         col("exposure_reference"), col("ead_pre_crm"),
         col("coll_covered"), col("guar_covered"), col("unsecured"))
@@ -97,7 +96,7 @@ class CrmConservationSpec extends SparkSpec {
     val expo = Seq(Expo("E-0", 1.0, 1000.00, 1.0)).toDF()
     val coll = Seq(Coll("C-0", "E-0", "financial", 1000.00 / 0.85)).toDF()
     val guar = Seq(Guar("G-0", "E-0", 1, 1.0)).toDF()
-    val r = DomainPipeline.crmWaterfall(expo, coll, guar, spark)
+    val r = DomainPipeline.crmWaterfall(expo, coll, guar)
       .select("coll_covered", "guar_covered", "unsecured").head()
     assert(math.abs(r.getDouble(0) - 1000.00) <= 0.02, s"collateral first: $r")
     assert(r.getDouble(1) <= 0.02, s"guarantee should be crowded out: $r")
