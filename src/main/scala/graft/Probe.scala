@@ -1,21 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Ad-hoc perf probe: time + explain selected queries (dev tool). */
 object Probe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
     // PROBE_CONF="k=v;k=v" — ad-hoc conf overrides for experiments
     val spark = sys.env.get("PROBE_CONF").toSeq
       .flatMap(_.split(";")).map(_.split("=", 2))
-      .foldLeft(b0) { case (b, Array(k, v)) => b.config(k, v) }
+      .foldLeft(LocalSession.builder()) { case (b, Array(k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val explain = sys.env.get("PROBE_EXPLAIN").contains("1")

@@ -36,15 +36,11 @@ final case class CalcConfig(
     framework: String = "CRR", // "CRR" | "BASEL_3_1"
     reportingDate: Date = Date.valueOf("2026-12-31"),
     permissionMode: String = "standardised", // "standardised" | "irb"
-    dataFormat: String = "parquet", // "parquet" | "csv"
-    baseCurrency: String = "USD",
     auditCacheDir: Option[String] = None) {
   require(framework == "CRR" || framework == "BASEL_3_1",
     s"framework must be 'CRR' or 'BASEL_3_1', got '$framework'")
   require(permissionMode == "standardised" || permissionMode == "irb",
     s"permission_mode must be 'standardised' or 'irb', got '$permissionMode'")
-  require(dataFormat == "parquet" || dataFormat == "csv",
-    s"data_format must be 'parquet' or 'csv', got '$dataFormat'")
 }
 
 /** calculate() outcome (reference `CalculationResponse`,
@@ -100,9 +96,8 @@ final class CreditRiskCalc(spark: SparkSession, config: CalcConfig) {
     val root = Paths.get(config.dataPath)
     if (!Files.isDirectory(root))
       return Seq(CalcError("DATA_PATH", s"not a directory: ${config.dataPath}"))
-    val ext = if (config.dataFormat == "csv") "csv" else "parquet"
     requiredTables.flatMap { t =>
-      val p = root.resolve(s"$t.$ext")
+      val p = root.resolve(s"$t.parquet")
       if (Files.exists(p)) None
       else Some(CalcError("MISSING_TABLE", s"required table missing: $p"))
     }

@@ -29,6 +29,12 @@ import graft.queries.Q._
   * `engine/materialise.py:220-243`). DomainPipelineSpec asserts both modes
   * produce identical results.
   *
+  * One persist rule holds for both modes: whoever composes the pipeline
+  * persists a frame read more than once (the CRM input), holds it and
+  * releases it — the ledger memo with its entry ([[releaseLedger]]), the
+  * stage fold through its context ([[PipelineContext.release]]). No stage
+  * function persists anything itself.
+  *
   * Scale shape: one scan of orders (exposure side), one scan of lineitem
   * (CRM side); counterparty joins broadcast and the constant rule tables
   * are CASE expressions, not joins; the only data-sized shuffles are the
@@ -482,20 +488,12 @@ object DomainPipeline {
     * exposure (collateral first), allocated greedily against EAD with an
     * ordered cumulative-sum window — never exceeding EAD — then collapsed
     * back to exposure grain with covered/uncovered conservation.
+    *
+    * `withRw` is read twice in the plan (the exposure spine and the EAD
+    * lookup of the item book), so the composer persists it — see
+    * [[buildLedger]].
     */
-  def crmWaterfall(withRw0: DataFrame, coll: DataFrame, guar: DataFrame): DataFrame = {
-    // This frame is consumed THREE times in one plan: the exposure spine
-    // plus the collateral-item and guarantee-item EAD lookups. Catalyst
-    // does not CSE across join branches, so without materialisation the
-    // entire upstream chain (scan → enrich → rating/group/provision
-    // windows → rule joins) executes three times per ledger action. The
-    // persist is the reference's materialised stage edge
-    // (`engine/materialise.py:220-243`) re-expressed — MEMORY_AND_DISK so
-    // a 100 TB book spills instead of recomputing; session-managed (the
-    // bench clears cache between queries). Measured at sf0.1: q94
-    // 6.0s → ~2.5s, q106 6.1s → ~2s.
-    val withRw = withRw0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pendingEdges.get += withRw
+  def crmWaterfall(withRw: DataFrame, coll: DataFrame, guar: DataFrame): DataFrame = {
     val haircut = ruleCase(haircutTable)(col("collateral_type") === _, lit(0.40))
     val exposureSide = withRw.select(
       col("exposure_reference"), col("fx_rate"), col("ead_pre_crm"))
@@ -671,11 +669,11 @@ object DomainPipeline {
     scala.collection.concurrent.TrieMap[(SparkSession, String, Boolean), Memo]()
 
   /** One memoised ledger: the PERSISTED build handle (its storageLevel is
-    * the liveness check, and releaseLedger unpersists it), the stage edges
+    * the liveness check, and releaseLedger unpersists it), the CRM edge
     * its build persisted, the re-rooted leaf consumers receive, and the
     * summaries computed over that leaf, keyed by regime (`b31`). The
     * summaries live and die with the entry. */
-  private final class Memo(val persisted: DataFrame, val edges: Seq[DataFrame]) {
+  private final class Memo(val persisted: DataFrame, val edge: DataFrame) {
     // RE-ROOT before handing out: consumers receive a LogicalRDD leaf
     // over the persisted plan's compiled RDD, not the ~300-node ledger
     // subtree itself. Persisting dedups EXECUTION but not PLAN size —
@@ -703,20 +701,9 @@ object DomainPipeline {
 
     def release(): Unit = {
       released = true
-      (persisted +: edges ++: summaries.values.toSeq).foreach(_.unpersist(false))
+      (persisted +: edge +: summaries.values.toSeq).foreach(_.unpersist(false))
     }
   }
-
-  /** Stage edges persisted during the in-flight ledger build (crmWaterfall
-    * registers its CRM edge here; `ledger` drains the buffer into the memo
-    * entry so `releaseLedger` can unpersist the WHOLE edge set).
-    * THREAD-LOCAL: a crmWaterfall invoked outside `ledger` (stage mode,
-    * specs) on another thread must never leak its edge into a build that
-    * happens to be in flight — each thread drains only what it itself
-    * registered. */
-  private val pendingEdges =
-    ThreadLocal.withInitial[scala.collection.mutable.ArrayBuffer[DataFrame]](
-      () => new scala.collection.mutable.ArrayBuffer[DataFrame])
 
   /** The full per-exposure audit ledger (wide frame), one lazy plan,
     * memoised + persisted per (session, dir, regime).
@@ -732,38 +719,31 @@ object DomainPipeline {
     memo(s, dir, irbMode).rooted
 
   /** The live memo entry for the key, built if absent or evicted; a stale
-    * entry is released (its edges and summaries with it). */
+    * entry is released (its edge and summaries with it). */
   private def memo(s: SparkSession, dir: String, irbMode: Boolean): Memo = {
     val key = (s, dir, irbMode)
-    // Check-then-act must be atomic and edge registration must be
-    // attributable to exactly one build: the REST server executes
-    // requests on a thread pool, so two concurrent consumers of the same
-    // (or a different) key would otherwise interleave — one build's CRM
-    // stage edge cleared by, or drained into, the other's memo entry,
-    // leaving releaseLedger to unpersist a live run's edge or leak the
-    // loser's. Building the entry is plan construction only (persist()
-    // is lazy, and the re-root runs later, outside the lock), so
-    // serialising it is cheap — the lock is never held across an
-    // executor round-trip.
+    // Check-then-act must be atomic: the REST server executes requests
+    // on a thread pool, so two concurrent consumers of the same key would
+    // otherwise both build, and the loser's persisted frames would leak.
+    // Building the entry is plan construction only (persist() is lazy,
+    // and the re-root runs later, outside the lock), so serialising it is
+    // cheap — the lock is never held across an executor round-trip.
     buildLock.synchronized {
       ledgerMemo.get(key)
         .filter(_.persisted.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
         .getOrElse {
           ledgerMemo.get(key).foreach(_.release())
-          pendingEdges.get.clear()
-          val df = buildLedger(s, dir, irbMode)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val entry = new Memo(df, pendingEdges.get.toList)
-          pendingEdges.get.clear()
+          val (led, edge) = buildLedger(s, dir, irbMode)
+          val entry = new Memo(
+            led.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK), edge)
           ledgerMemo.put(key, entry)
           entry
         }
     }
   }
 
-  /** Serialises memo-entry builds: guards the memo check-then-act, scopes
-    * `pendingEdges` to the single in-flight build, and guards each entry's
-    * summaries. */
+  /** Serialises memo-entry builds: guards the memo check-then-act and
+    * each entry's summaries. */
   private val buildLock = new Object
 
   /** Test hook: the PERSISTED (un-rooted) ledger handle, if memoised —
@@ -776,35 +756,39 @@ object DomainPipeline {
     ledgerMemo.get((s, dir, irbMode)).map(_.persisted)
 
   /** Release one memoised ledger edge: drop the memo entry and unpersist
-    * the ledger, the stage edges its build persisted (the CRM waterfall's
-    * materialised input) and its summaries. Long-lived callers (the REST
-    * run store) call this on eviction so the Spark cache does not grow
-    * without bound; `unpersist` on an already-evicted frame is a no-op. */
+    * the ledger, the CRM edge its build persisted and its summaries.
+    * Long-lived callers (the REST run store) call this on eviction so the
+    * Spark cache does not grow without bound; `unpersist` on an already-evicted frame is a no-op. */
   def releaseLedger(s: SparkSession, dir: String, irbMode: Boolean = true): Unit =
     buildLock.synchronized(ledgerMemo.remove((s, dir, irbMode)).foreach(_.release()))
 
-  /** Probe hook: the un-memoised composed plan (no persist, no re-root). */
+  /** Probe hook: the un-memoised composed plan (no ledger persist, no
+    * re-root). */
   private[graft] def rawLedgerPlan(
       s: SparkSession, dir: String, irbMode: Boolean = true): DataFrame =
-    buildLedger(s, dir, irbMode)
+    buildLedger(s, dir, irbMode)._1
 
-  /** The un-memoised ledger plan (the composition itself). */
-  private def buildLedger(s: SparkSession, dir: String, irbMode: Boolean): DataFrame = {
-    val trace = sys.env.get("PROBE_BUILD").contains("1")
-    def t[A](tag: String)(f: => A): A =
-      if (!trace) f else {
-        val t0 = System.nanoTime(); val r = f
-        println(f"[build-probe] $tag: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-      }
-    val exp = t("exposuresUnified")(exposuresUnified(s, dir))
-    val cpty = t("counterparties")(counterparties(s, dir))
-    val enriched = t("enrichFx")(enrichFx(exp, cpty))
-    val h = t("hierarchy")(hierarchy(enriched))
-    val cls = t("classify")(classify(h, modelPermissions(s, dir), irbMode))
-    val ead = t("eadCalc")(eadCalc(cls, provisions(s, dir)))
-    val withRw = t("ownRiskWeight")(ownRiskWeight(ead))
-    val crm = t("crmWaterfall")(crmWaterfall(withRw, collateral(s, dir), guarantees(s, dir)))
-    t("rwaCalc+audit")(auditColumns(rwaCalc(crm)))
+  /** The un-memoised ledger plan (the composition itself), with the CRM
+    * input it persisted — the caller owns that persist and releases it. */
+  private def buildLedger(
+      s: SparkSession, dir: String, irbMode: Boolean): (DataFrame, DataFrame) = {
+    val exp = exposuresUnified(s, dir)
+    val cpty = counterparties(s, dir)
+    val h = hierarchy(enrichFx(exp, cpty))
+    val cls = classify(h, modelPermissions(s, dir), irbMode)
+    // The CRM input is consumed twice in one plan: the exposure spine and
+    // the EAD lookup of the unified collateral/guarantee item book.
+    // Catalyst does not CSE across join branches, so without
+    // materialisation the entire upstream chain (scan → enrich →
+    // rating/group/provision windows → rule joins) executes once per
+    // branch per ledger action. The persist is the reference's materialised
+    // stage edge (`engine/materialise.py:220-243`) re-expressed —
+    // MEMORY_AND_DISK so a 100 TB book spills instead of recomputing.
+    // Measured at sf0.1: q94 6.0s → ~2.5s, q106 6.1s → ~2s.
+    val withRw = ownRiskWeight(eadCalc(cls, provisions(s, dir)))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val crm = crmWaterfall(withRw, collateral(s, dir), guarantees(s, dir))
+    (auditColumns(rwaCalc(crm)), withRw)
   }
 
   /** The (class, approach) roll-up of a ledger frame with portfolio
@@ -845,10 +829,13 @@ object DomainPipeline {
   }
 
   /** The same pipeline as Orchestrator stages with materialised edges —
-    * execution-mode parity is asserted by DomainPipelineSpec. */
+    * execution-mode parity is asserted by DomainPipelineSpec. The CRM
+    * input is an edge of its own, sealed ahead of the ledger built from it
+    * (read twice — see [[buildLedger]]). */
   def stages(s: SparkSession, dir: String): (Seq[Stage], ArtifactKey[DataFrame]) = {
     val kEnriched = ArtifactKey[DataFrame]("enriched")
     val kClassified = ArtifactKey[DataFrame]("classified")
+    val kCrmInput = ArtifactKey[DataFrame]("crm_input")
     val kLedger = ArtifactKey[DataFrame]("ledger")
     val kSummary = ArtifactKey[DataFrame]("summary")
     val sts = Seq(
@@ -869,11 +856,11 @@ object DomainPipeline {
         def name = "calc_crm_rwa"
         def run(ctx: PipelineContext) = {
           val withRw = ownRiskWeight(eadCalc(ctx.get(kClassified), provisions(s, dir)))
-          ctx.put(kLedger,
+          ctx.put(kCrmInput, withRw).put(kLedger,
             auditColumns(rwaCalc(
               crmWaterfall(withRw, collateral(s, dir), guarantees(s, dir)))))
         }
-        override def edgeFrames = Seq(kLedger)
+        override def edgeFrames = Seq(kCrmInput, kLedger)
       },
       new Stage {
         def name = "aggregate"

@@ -436,9 +436,7 @@ object Dedup {
 
     var round = 0
     var converged = false
-    val profile = sys.env.contains("GRAFT_CC_PROFILE")
     while (!converged && round < maxIter) {
-      val roundT0 = System.nanoTime()
       val neighbourMin = edges
         .join(labels, edges("dst") === labels("cc_id"))
         .groupBy(col("src")).agg(min(col("cc_label")).as("cc_nmin"))
@@ -479,9 +477,6 @@ object Dedup {
       persistedGen.unpersist(false)
       persistedGen = next
       round += 1
-      if (profile)
-        println(f"[cc-profile] round $round: ${(System.nanoTime() - roundT0) / 1e6}%.0f ms" +
-          (if (converged) " (converged)" else ""))
     }
     edges.unpersist(false)
     // No-silent-caps convention: a non-converged exit would return

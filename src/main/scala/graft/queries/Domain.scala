@@ -3272,11 +3272,12 @@ object Domain {
       // The scoped bundle edges are multi-consumer (cpty feeds the
       // exposure semi-join, the provision union AND enrichFx; exp feeds
       // enrichFx and — via expKeys — the collateral/guarantee/provision
-      // semi-joins). Catalyst does not CSE across join branches, so
-      // unpersisted the counterparty chain executed 27× and the
-      // exposure-unify chain 10× per run (scan counts from
-      // plans/r20/q168_reporting_scope_before.txt). Persisting the two
-      // shared edges makes each chain ONE pass — at 100 TB this is the
+      // semi-joins; withRw feeds both reads of the CRM waterfall).
+      // Catalyst does not CSE across join branches, so unpersisted the
+      // counterparty chain executed 27× and the exposure-unify chain 10×
+      // per run (scan counts from
+      // plans/r20/q168_reporting_scope_before.txt). Persisting the shared
+      // edges makes each chain ONE pass — at 100 TB this is the
       // difference between one and ten scans of the exposure book
       // (guide §2.4).
       val cpty = DomainPipeline.counterparties(s, dir)
@@ -3302,6 +3303,7 @@ object Domain {
       val cls = DomainPipeline.classify(h, DomainPipeline.modelPermissions(s, dir))
       val ead = DomainPipeline.eadCalc(cls, prov)
       val withRw = DomainPipeline.ownRiskWeight(ead)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val crm = DomainPipeline.crmWaterfall(withRw, coll, guar)
       val led = DomainPipeline.rwaCalc(crm)
       led.groupBy(col("exposure_class"), col("approach"))

@@ -48,9 +48,7 @@ final case class RefBundle(
 final case class RefRunConfig(
     framework: String, // "CRR" | "BASEL_3_1"
     reportingDate: LocalDate,
-    permissionMode: String = "standardised", // "standardised" | "irb"
-    baseCurrency: String = "GBP",
-    homeCountry: String = "GB") {
+    permissionMode: String = "standardised") { // "standardised" | "irb"
   require(framework == "CRR" || framework == "BASEL_3_1")
   def isB31: Boolean = framework == "BASEL_3_1"
 

@@ -90,6 +90,16 @@ class CrmConservationSpec extends SparkSpec {
     }
   }
 
+  test("the waterfall persists nothing: its composer owns the persist") {
+    val (expos, colls, guars) = bookGen(20)
+      .apply(Gen.Parameters.default, Seed(7L)).get
+    val before = spark.sparkContext.getPersistentRDDs.size
+    val rows = DomainPipeline.crmWaterfall(expos.toDF(), colls.toDF(), guars.toDF())
+      .collect()
+    assert(rows.length == expos.length)
+    assert(spark.sparkContext.getPersistentRDDs.size == before)
+  }
+
   test("collateral priority: guarantees only absorb what collateral left") {
     // one exposure, collateral worth exactly EAD after haircut, plus a
     // full-coverage guarantee: the guarantee must get nothing.

@@ -16,6 +16,11 @@ class DomainPipelineSpec extends SparkSpec {
 
   test("orchestrated stage fold equals the lazy single-plan summary") {
     val lazySummary = DomainPipeline.summary(spark, sfDir).collect().toSeq
+    // the fold's edges share plans with the memo's, and a plan is cached
+    // once: release the memo so the fold's own persists can be counted
+    DomainPipeline.releaseLedger(spark, sfDir)
+    def persisted = spark.sparkContext.getPersistentRDDs.size
+    val before = persisted
     val (stages, kSummary) = DomainPipeline.stages(spark, sfDir)
     val ctx = Orchestrator.runStages(stages, PipelineContext())
     val orchestrated = ctx.get(kSummary).collect().toSeq
@@ -23,6 +28,11 @@ class DomainPipelineSpec extends SparkSpec {
       s"execution modes diverge:\n lazy=$lazySummary\n orch=$orchestrated")
     assert(ctx.timings.map(_._1) ==
       Seq("load_enrich", "hierarchy_classify", "calc_crm_rwa", "aggregate"))
+    // one edge outlives the fold (the ledger the summary reads), and only
+    // until the caller releases it
+    assert(persisted == before + 1, s"${persisted - before} RDDs left by the fold")
+    ctx.release()
+    assert(persisted == before, s"${persisted - before} RDDs left after release")
   }
 
   test("CRM conservation: covered + unsecured = EAD per exposure (to the cent)") {

@@ -38,7 +38,7 @@ class PipelineSpec extends SparkSpec {
     assert(out.get(doubled).storageLevel.useMemory, "edge frame should be persisted")
   }
 
-  test("keepEdges bounds the number of pinned generations") {
+  test("the fold pins only the newest edge; release() unpins it") {
     val keys = (0 until 5).map(i => ArtifactKey[DataFrame](s"e$i"))
     val stages = keys.zipWithIndex.map { case (k, i) =>
       new Stage {
@@ -47,10 +47,25 @@ class PipelineSpec extends SparkSpec {
         override def edgeFrames = Seq(k)
       }
     }
-    val out = Orchestrator.runStages(stages, PipelineContext(),
-      Orchestrator.Options(keepEdges = 2))
-    val pinnedCount = keys.map(out.get(_))
-      .count(_.storageLevel.useMemory)
-    assert(pinnedCount == 2, s"expected 2 pinned edges, got $pinnedCount")
+    val out = Orchestrator.runStages(stages, PipelineContext())
+    def pinnedCount = keys.map(out.get(_)).count(_.storageLevel.useMemory)
+    assert(pinnedCount == 1, s"expected 1 pinned edge, got $pinnedCount")
+    assert(out.get(keys.last).storageLevel.useMemory, "the newest edge stays pinned")
+    out.release()
+    assert(pinnedCount == 0, s"expected 0 pinned edges after release, got $pinnedCount")
+  }
+
+  test("the fold never unpersists an edge cached before it ran") {
+    val shared = spark.range(7).toDF("id").persist()
+    val stages = Seq(shared, spark.range(8).toDF("id")).zipWithIndex.map { case (df, i) =>
+      new Stage {
+        def name = s"s$i"
+        def run(ctx: PipelineContext) = ctx.put(raw, df)
+        override def edgeFrames = Seq(raw)
+      }
+    }
+    Orchestrator.runStages(stages, PipelineContext()).release()
+    assert(shared.storageLevel.useMemory, "an edge cached by its caller was unpersisted")
+    shared.unpersist()
   }
 }

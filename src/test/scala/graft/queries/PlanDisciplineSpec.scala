@@ -2,6 +2,8 @@ package graft.queries
 
 import graft.{SparkEntry, SparkSpec}
 import graft.sources.Tables
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
 import org.apache.spark.sql.functions._
 
 /** Plan-shape discipline (SURVEY.md §4.1): the judge-visible promises —
@@ -10,7 +12,7 @@ import org.apache.spark.sql.functions._
   * optimized plan grows past the edge guardrail (the reference's per-edge
   * plan-node ceiling, `tests/integration/test_stage_edges.py`).
   */
-class PlanDisciplineSpec extends SparkSpec {
+class PlanDisciplineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val sfDir = "/root/testdata/sf0.001"
 
@@ -86,16 +88,17 @@ class PlanDisciplineSpec extends SparkSpec {
   }
 
   test("the CRM stage edge is materialised (ledger consumed once, not thrice)") {
-    // crmWaterfall persists its input: the exposure spine and the two
-    // CRM item lookups must all read the SAME in-memory relation rather
+    // the ledger build persists the CRM input: the exposure spine and the
+    // CRM item lookup must both read the SAME in-memory relation rather
     // than re-executing the upstream chain per consumer. The edge is
     // visible in the ledger BUILD plan (consumers see only the re-rooted
-    // leaf).
-    SparkEntry.queries("q90_domain_pipeline")(spark, sfDir)
-    val plan = graft.engine.DomainPipeline.persistedHandle(spark, sfDir).get
-      .queryExecution.optimizedPlan.toString
-    assert(plan.contains("InMemoryRelation"),
-      s"ledger build should read the persisted CRM edge:\n${plan.take(2000)}")
+    // leaf), which is the cached plan of the ledger's own relation.
+    SparkEntry.queries("q90_domain_pipeline")(spark, sfDir).collect()
+    val build = graft.engine.DomainPipeline.persistedHandle(spark, sfDir).get
+      .queryExecution.optimizedPlan.collectFirst { case r: InMemoryRelation => r.cachedPlan }.get
+    val reads = collect(build) { case s: InMemoryTableScanExec => s.relation.cacheBuilder }
+    assert(reads.size >= 2 && reads.distinct.size == 1,
+      s"ledger build should read the persisted CRM edge:\n${build.toString.take(2000)}")
   }
 
   test("worklists are distributed top-k, not single-partition sort windows (q93)") {
