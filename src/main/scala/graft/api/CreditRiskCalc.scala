@@ -22,9 +22,9 @@ import graft.sources.Sinks
   *
   * `calculate()` validates inputs and builds the memoised, persisted
   * ledger. That is not free: handing out the ledger's re-rooted leaf
-  * compiles its plan, and adaptive execution runs every shuffle stage of
-  * the build there (dozens of jobs). The final ledger stage runs, and the
-  * cache fills, on the first read. The summary stays lazy: it is persisted
+  * compiles its plan, and adaptive execution runs the whole build there,
+  * filling the ledger's cache — 11 Spark jobs on the harness books
+  * (sf0.001, sf0.01), each a stage of the build. The summary stays lazy: it is persisted
   * but computed only when first read, then served from the cache — the
   * Spark-first replacement for the reference's results-cache +
   * `scan_results()` re-scan discipline (`api/service.py:145-187`,

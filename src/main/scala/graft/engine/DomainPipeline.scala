@@ -30,16 +30,26 @@ import graft.queries.Q._
   * produce identical results.
   *
   * One persist rule holds for both modes: whoever composes the pipeline
-  * persists a frame read more than once (the CRM input), holds it and
-  * releases it — the ledger memo with its entry ([[releaseLedger]]), the
-  * stage fold through its context ([[PipelineContext.release]]). No stage
-  * function persists anything itself.
+  * persists a frame read more than once, holds it and releases it — the
+  * ledger memo its ledger ([[releaseLedger]]), the stage fold its edges
+  * ([[PipelineContext.release]]). No stage function persists anything
+  * itself, and the composed ledger plan reads each of its frames once
+  * (the CRM waterfall takes its input through one exchange), so nothing
+  * inside it needs a persist.
   *
-  * Scale shape: one scan of orders (exposure side), one scan of lineitem
-  * (CRM side); counterparty joins broadcast and the constant rule tables
-  * are CASE expressions, not joins; the only data-sized shuffles are the
-  * CRM item join + per-exposure waterfall window and the final summary —
-  * the plan that holds at 100 TB.
+  * Scale shape: the only data-sized shuffles are the lending-group and
+  * counterparty windows, the ONE exchange of the CRM waterfall (exposure
+  * spine and collateral/guarantee items together, every CRM value a
+  * window over it), the spine's shuffle ahead of the ledger cache, and
+  * the final summary. The counterparty, grant and
+  * provision joins broadcast (one provision aggregate serves both
+  * levels), the best-rating pick is a per-row array expression, and the
+  * constant rule tables are CASE expressions and array lookups, not
+  * joins — the plan that holds at 100 TB. A `calculate()` starts 11 Spark
+  * jobs at sf0.001 and sf0.01: four broadcasts (nation, region, grants,
+  * counterparties), the provision aggregate and its broadcast, the two
+  * group windows' shuffles, the CRM exchange, the stage boundary before
+  * the cache (see [[buildLedger]]) and the ledger's cache fill.
   */
 object DomainPipeline {
 
@@ -175,41 +185,28 @@ object DomainPipeline {
 
   // ---- stage 1: derive + conform domain tables -------------------------
 
-  /** Multi-rating book (reference RATINGS_SCHEMA `data/schemas.py:929`):
-    * each non-negative-balance customer carries 1-3 agency assessments,
-    * cqs varying by agency — the input the best-rating pick resolves.
-    * Negative-balance customers are unrated (no rows). */
-  def ratings(s: SparkSession, dir: String): DataFrame =
-    Tables.customer(s, dir)
-      .filter(col("c_acctbal") >= 0)
-      .select(col("c_custkey"),
-        explode(sequence(lit(0), col("c_custkey") % 3)).as("rating_agency"))
-      .select(
-        concat(lit("CP-"), col("c_custkey").cast("string")).as("counterparty_reference"),
-        col("rating_agency").cast("int").as("rating_agency"),
-        ((col("c_custkey") + col("rating_agency") * 7) % 6 + 1).cast("int").as("cqs"))
-
   /** Counterparties: customer ⋈ nation ⋈ region; parent group = nation
-    * (org_mappings analogue). `own_cqs` comes from the multi-rating
-    * book via the rank-1 best-rating pick (reference
-    * `stages/hierarchy/ratings.py:106-127`: lowest cqs wins,
-    * deterministic agency tie-break) — the inheritance join runs INSIDE
-    * the composed pipeline, not just as the isolated q22 demo. The pick
-    * windows on the counterparty key and the join back shares that same
-    * key, so the two exchanges co-partition; unrated counterparties get
-    * null and fall through to the group-best inheritance in
-    * [[hierarchy]]. */
+    * (org_mappings analogue). `own_cqs` is the rank-1 best-rating pick
+    * (reference `stages/hierarchy/ratings.py:106-127`: lowest cqs wins,
+    * deterministic agency tie-break) over the multi-rating book (reference
+    * RATINGS_SCHEMA `data/schemas.py:929`): each non-negative-balance
+    * customer carries 1-3 agency assessments, cqs varying by agency. Every
+    * assessment derives from the customer's own row, so the pick is a
+    * per-row `array_min` over the row's (cqs, agency) structs — struct
+    * order is the rank order — with no window shuffle and no join back.
+    * Negative-balance counterparties are unrated (null) and fall through
+    * to the group-best inheritance in [[hierarchy]]. */
   def counterparties(s: SparkSession, dir: String): DataFrame = {
     val c = Tables.customer(s, dir)
     val n = Tables.nation(s, dir)
     val r = Tables.region(s, dir)
     val sector = ruleCase(sectorMap)(col("c_mktsegment") === _, lit("corporate"))
-    val wRating = Window.partitionBy(col("counterparty_reference"))
-      .orderBy(col("cqs"), col("rating_agency"))
-    val best = ratings(s, dir)
-      .withColumn("rn", row_number().over(wRating))
-      .filter(col("rn") === 1)
-      .select(col("counterparty_reference"), col("cqs").as("own_cqs"))
+    val assessments = transform(sequence(lit(0), col("c_custkey") % 3), a => {
+      val agency = a.cast("int")
+      struct(((col("c_custkey") + agency * 7) % 6 + 1).cast("int").as("cqs"),
+        agency.as("rating_agency"))
+    })
+    val best = when(col("c_acctbal") >= 0, array_min(assessments).getField("cqs"))
     val df = c.join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
       .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
       .select(
@@ -219,8 +216,8 @@ object DomainPipeline {
         sector.as("sector"),
         col("n_name").as("country"),
         col("r_name").as("region_name"),
-        (col("c_acctbal") * lit(10000.0)).as("turnover"))
-      .join(best, Seq("counterparty_reference"), "left")
+        (col("c_acctbal") * lit(10000.0)).as("turnover"),
+        best.as("own_cqs"))
     counterpartyEdge.conform(df)
   }
 
@@ -398,17 +395,16 @@ object DomainPipeline {
     *  - IRB deducts nothing (provisions feed the EL shortfall/excess
     *    comparison instead — q100); `provision_allocated` is tracked.
     *
-    * Scale shape: the provision books aggregate to beneficiary grain
-    * BEFORE joining (one small shuffle each), the direct join shares the
-    * exposure key, and the pro-rata window shuffles on the counterparty
-    * key once. */
+    * Scale shape: the provision book aggregates to beneficiary grain
+    * BEFORE joining (one small shuffle), and both joins read that one
+    * aggregate, so it is broadcast once: direct (`ORD-`) and counterparty
+    * (`CP-`) beneficiary references never collide, so each join picks its
+    * own level by key alone. Both joins must read the SAME plan — a
+    * per-level filter or projection would give each its own broadcast.
+    * The pro-rata window shuffles on the counterparty key once. */
   def eadCalc(c: DataFrame, prov: DataFrame): DataFrame = {
-    val provDirect = prov.filter(col("beneficiary_type") === "direct")
-      .groupBy(col("beneficiary_reference").as("pd_ref"))
-      .agg(dsum(col("amount"), 2).as("prov_direct"))
-    val provCp = prov.filter(col("beneficiary_type") === "counterparty")
-      .groupBy(col("beneficiary_reference").as("pc_ref"))
-      .agg(dsum(col("amount"), 2).as("prov_cp"))
+    val provByRef = prov.groupBy(col("beneficiary_reference").as("prov_ref"))
+      .agg(dsum(col("amount"), 2).as("prov_amount"))
     val wCp = Window.partitionBy(col("counterparty_reference"))
     val isSa = col("approach") === "SA"
     // dependent columns are INLINED as expression values so the whole
@@ -429,7 +425,7 @@ object DomainPipeline {
         greatest(provAlloc - provOnDrawn, lit(0.0)),
         col("undrawn_base"))).otherwise(0.0)
     // ccf_type: the exposure type when [[ccfTable]] has it, else null
-    c.select(col("*"),
+    val withEad = c.select(col("*"),
         ruleCase(ccfTable.map { case (t, _) => t -> t })(col("exposure_type") === _)
           .as("ccf_type"),
         ruleCase(ccfTable)(col("exposure_type") === _).as("ccf"))
@@ -437,9 +433,12 @@ object DomainPipeline {
         "ccf_eff" -> coalesce(col("ccf"), lit(1.0)),
         "ead_gross" ->
           q2(col("drawn_base") + col("undrawn_base") * coalesce(col("ccf"), lit(1.0)))))
-      .join(provDirect, col("exposure_reference") === col("pd_ref"), "left")
-      .join(provCp, col("counterparty_reference") === col("pc_ref"), "left")
-      .drop("pd_ref", "pc_ref")
+    val withProv = withEad
+      .join(provByRef.as("pd"), col("exposure_reference") === col("pd.prov_ref"), "left")
+      .join(provByRef.as("pc"), col("counterparty_reference") === col("pc.prov_ref"), "left")
+    withProv.select(withEad.columns.map(withEad(_)) :+
+        col("pd.prov_amount").as("prov_direct") :+
+        col("pc.prov_amount").as("prov_cp"): _*)
       .withColumn("cp_basis", dsumOver(col("ead_gross"), 2, wCp))
       .withColumns(Map(
         "provision_allocated" -> provAlloc,
@@ -452,8 +451,9 @@ object DomainPipeline {
       .drop("prov_direct", "prov_cp", "cp_basis")
   }
 
-  /** Own SA risk weight: the (class, cqs) decision table as a CASE
-    * expression, unmatched pairs at 100%. The defaulted book takes the
+  /** Own SA risk weight: the (class, cqs) decision table as a CASE over
+    * the class that picks the class's weight array, indexed by cqs;
+    * unmatched pairs at 100%. The defaulted book takes the
     * CRR Art. 127 override in BOTH regimes: 100% when specific provisions
     * reach 20% of the gross exposure value (the pre-deduction basis — the
     * provision test is on the pre-adjustment value), else 150%. */
@@ -461,11 +461,24 @@ object DomainPipeline {
     val defaultedRw =
       when(col("provision_allocated") >= col("ead_gross") * 0.2, 1.0).otherwise(1.5)
     val isDefaultedSa = col("is_defaulted") && col("approach") === "SA"
-    def weight(table: Seq[(String, Int, Double)]): Column =
+    // one weight array per class instead of one CASE branch per (class,
+    // cqs): the two 30-branch chains were the largest generated class of
+    // the build. Indices outside 1..max are guarded (element_at throws on
+    // 0 and reads negative indices from the end), and a cqs the table
+    // lacks weighs 100%, as an unmatched pair did.
+    val cqs = col("effective_cqs")
+    def weight(table: Seq[(String, Int, Double)]): Column = {
+      val byKey = table.map { case (c, q, w) => (c, q) -> w }.toMap
+      val maxCqs = table.map(_._2).max
+      val byClass = table.map(_._1).distinct.map { c =>
+        c -> coalesce(
+          when(cqs.between(1, maxCqs), try_element_at(
+            typedLit(Seq.tabulate(maxCqs)(i => byKey.getOrElse((c, i + 1), 1.0))), cqs)),
+          lit(1.0))
+      }
       when(isDefaultedSa, defaultedRw).otherwise(
-        ruleCase(table.map { case (c, q, w) => (c, q) -> w })(
-          { case (c, q) => col("exposure_class") === c && col("effective_cqs") === q },
-          lit(1.0)))
+        ruleCase(byClass)(col("exposure_class") === _, lit(1.0)))
+    }
     // shadow regime: the candidate rule-set's weight resolved in the
     // SAME projection (the reference runs the pipeline once per framework
     // and compares materialised runs — at scale, one pass computing both
@@ -489,19 +502,17 @@ object DomainPipeline {
     * ordered cumulative-sum window — never exceeding EAD — then collapsed
     * back to exposure grain with covered/uncovered conservation.
     *
-    * `withRw` is read twice in the plan (the exposure spine and the EAD
-    * lookup of the item book), so the composer persists it — see
-    * [[buildLedger]].
+    * `withRw` is read once. Its rows (the exposure spine, priority 0) and
+    * the item rows are one union behind ONE exchange on the exposure key,
+    * and every per-exposure value is a window over that partition: the
+    * spine's EAD and FX rate carried onto its items, the ordered
+    * allocation, and the covered totals, which land on the spine row kept
+    * at the end. No join back to the spine, so nothing to persist.
     */
   def crmWaterfall(withRw: DataFrame, coll: DataFrame, guar: DataFrame): DataFrame = {
     val haircut = ruleCase(haircutTable)(col("collateral_type") === _, lit(0.40))
-    val exposureSide = withRw.select(
-      col("exposure_reference"), col("fx_rate"), col("ead_pre_crm"))
-    // One unified item book, ONE join to the exposure side. A union of
-    // separately-joined collateral and guarantee frames would scan each
-    // book's source once AND shuffle-join the exposure side twice; the
-    // diagonal union (null-padded type-specific columns) halves both —
-    // the item join is the data-sized shuffle of this stage at 100 TB.
+    // One unified item book: the diagonal union (null-padded
+    // type-specific columns) scans each book's source once.
     val rawItems = coll.select(
         col("exposure_reference"),
         lit(1).as("priority"),
@@ -518,68 +529,85 @@ object DomainPipeline {
         lit(null).cast("double").as("market_value"),
         col("guarantor_cqs"),
         col("coverage_pct")))
-    val items = rawItems
-      .join(exposureSide, Seq("exposure_reference"))
-      .select(
-        col("exposure_reference"),
-        col("priority"),
-        col("item_ref"),
-        col("collateral_type"),
-        when(col("priority") === 1,
-          q2(col("market_value") * col("fx_rate") * (lit(1.0) - haircut)))
-          .otherwise(q2(col("coverage_pct") * col("ead_pre_crm"))).as("amount"),
-        when(col("priority") === 2, guarantorRw(col("guarantor_cqs")))
-          .cast("double").as("guarantor_rw"),
-        col("ead_pre_crm"))
+    // ...and the exposure spine beside it, priority 0, each input row
+    // whole in ONE struct column: the item rows carry one null for it,
+    // and the sort and windows below copy one field, not every column
+    val key = withRw.schema("exposure_reference")
+    val spine = withRw.schema.fields.toSeq.filter(_ ne key)
+    val rows = withRw
+      .select(col("exposure_reference") +:
+        struct(spine.map(f => col(f.name)): _*).as("spine") +:
+        rawItems.schema.fields.toSeq.filter(_ ne rawItems.schema(key.name))
+          .map(f => lit(null).cast(f.dataType).as(f.name)): _*)
+      .withColumn("priority", lit(0))
+      .unionByName(rawItems.withColumn("spine", lit(null).cast(StructType(spine))))
     // TOTAL order: the synthetic books can carry duplicate item
     // references (the harness lineitem table repeats (orderkey,
     // linenumber) pairs), and a greedy cutoff landing on a tie would
     // allocate engine-dependently — invisible in the covered TOTAL
-    // (tie-invariant) but visible in the per-type split. Tie-break by
-    // every column that affects downstream attribution; the null
-    // columns are constant within each priority class, so engine
-    // null-ordering defaults never engage.
-    val wWf = Window.partitionBy(col("exposure_reference"))
+    // (tie-invariant) but visible in the per-type split. Within one
+    // exposure the FX rate and EAD are constant and non-negative, so a
+    // collateral's amount rises with its market value (one type, one
+    // haircut) and a guarantee's with its coverage: ordering by those raw
+    // inputs is the order by (amount, guarantor weight) up to rows of
+    // equal amount, whose swap changes no total. Needing no amount, this
+    // ONE order serves all three windows, so the partitions are sorted
+    // once. Nulls are constant within each priority class, so engine
+    // null-ordering defaults never engage. The spine row (priority 0,
+    // null amount) sorts first and adds nothing to the running sum.
+    val wExp = Window.partitionBy(col("exposure_reference"))
       .orderBy(col("priority"), col("item_ref"), col("collateral_type"),
-        col("amount"), col("guarantor_rw"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        col("market_value"), col("coverage_pct"), col("guarantor_cqs"))
+    val wAll = wExp.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    // the spine's values on every row of its exposure; an item with no
+    // spine row gets nulls and is dropped with the item rows at the end
+    val items = rows
+      .withColumns(Map(
+        "item_fx" -> max(col("spine.fx_rate")).over(wAll),
+        "item_ead" -> max(col("spine.ead_pre_crm")).over(wAll)))
+      .withColumns(Map(
+        "amount" ->
+          when(col("priority") === 1,
+            q2(col("market_value") * col("item_fx") * (lit(1.0) - haircut)))
+            .when(col("priority") === 2, q2(col("coverage_pct") * col("item_ead"))),
+        "guarantor_rw" ->
+          when(col("priority") === 2, guarantorRw(col("guarantor_cqs"))).cast("double")))
     // one projection: the inlined window expressions are canonically
     // identical, so ExtractWindowExpressions computes the cumsum once
-    val cum = dsumOver(col("amount"), 2, wWf)
+    val cum = dsumOver(col("amount"), 2,
+      wExp.rowsBetween(Window.unboundedPreceding, Window.currentRow))
     val alloc = items
       .withColumns(Map(
         "cum" -> cum,
         "allocated" -> q2(greatest(lit(0.0),
-          least(col("amount"), col("ead_pre_crm") - (cum - col("amount")))))))
+          least(col("amount"), col("item_ead") - (cum - col("amount")))))))
     // Per-type collateral tracking (reference ledger columns for COREP
     // C 08.01 cols 0170-0210, `data/schemas.py:2966-2971`): the same
     // allocated legs split by collateral family — an exact partition of
-    // coll_covered, proven by q94's v_colltype rules.
+    // coll_covered, proven by q94's v_colltype rules. The spine row adds
+    // 0 to each sum, so an exposure without items covers 0.
     val isColl = col("priority") === 1
-    val perExposure = alloc.groupBy(col("exposure_reference")).agg(
-      dsum(when(isColl, col("allocated")).otherwise(0.0), 2)
-        .as("coll_covered"),
-      dsum(when(isColl && col("collateral_type").isin("financial", "gold"),
-        col("allocated")).otherwise(0.0), 2).as("collateral_financial_value"),
-      dsum(when(isColl && col("collateral_type").isin("re_residential", "re_commercial"),
-        col("allocated")).otherwise(0.0), 2).as("collateral_re_value"),
-      dsum(when(isColl && col("collateral_type") === "other",
-        col("allocated")).otherwise(0.0), 2).as("collateral_other_value"),
-      dsum(when(col("priority") === 2, col("allocated")).otherwise(0.0), 2)
-        .as("guar_covered"),
-      max(col("guarantor_rw")).as("guarantor_rw"))
-    withRw.join(perExposure, Seq("exposure_reference"), "left")
-      .withColumns(Map(
-        "coll_covered" -> coalesce(col("coll_covered"), lit(0.0)),
-        "collateral_financial_value" ->
-          coalesce(col("collateral_financial_value"), lit(0.0)),
-        "collateral_re_value" -> coalesce(col("collateral_re_value"), lit(0.0)),
-        "collateral_other_value" ->
-          coalesce(col("collateral_other_value"), lit(0.0)),
-        "guar_covered" -> coalesce(col("guar_covered"), lit(0.0)),
-        "unsecured" -> greatest(lit(0.0),
-          q2(col("ead_pre_crm") - coalesce(col("coll_covered"), lit(0.0)) -
-            coalesce(col("guar_covered"), lit(0.0))))))
+    def covered(leg: Column): Column =
+      coalesce(dsumOver(when(leg, col("allocated")).otherwise(0.0), 2, wAll), lit(0.0))
+    val totals = Seq(
+      "coll_covered" -> covered(isColl),
+      "collateral_financial_value" ->
+        covered(isColl && col("collateral_type").isin("financial", "gold")),
+      "collateral_re_value" ->
+        covered(isColl && col("collateral_type").isin("re_residential", "re_commercial")),
+      "collateral_other_value" -> covered(isColl && col("collateral_type") === "other"),
+      "guar_covered" -> covered(col("priority") === 2),
+      "guarantor_rw" -> max(col("guarantor_rw")).over(wAll))
+    // the union made the spine struct and the key nullable; the kept
+    // spine rows carry the input's values, so its nullability is restored
+    val kept = GraftBridge.knownNotNull(col("spine"))
+    val keyOut = if (key.nullable) col(key.name) else GraftBridge.knownNotNull(col(key.name))
+    alloc.select(col("*") +: totals.map { case (n, c) => c.as(s"${n}_total") }: _*)
+      .filter(col("priority") === 0)
+      .select((keyOut.as(key.name) +: spine.map(f => kept.getField(f.name).as(f.name))) ++
+        totals.map { case (n, _) => col(s"${n}_total").as(n) } :+
+        greatest(lit(0.0), q2(kept.getField("ead_pre_crm") - col("coll_covered_total") -
+          col("guar_covered_total"))).as("unsecured"): _*)
   }
 
   // ---- stage 7: RWA + supporting factor --------------------------------
@@ -669,11 +697,10 @@ object DomainPipeline {
     scala.collection.concurrent.TrieMap[(SparkSession, String, Boolean), Memo]()
 
   /** One memoised ledger: the PERSISTED build handle (its storageLevel is
-    * the liveness check, and releaseLedger unpersists it), the CRM edge
-    * its build persisted, the re-rooted leaf consumers receive, and the
-    * summaries computed over that leaf, keyed by regime (`b31`). The
-    * summaries live and die with the entry. */
-  private final class Memo(val persisted: DataFrame, val edge: DataFrame) {
+    * the liveness check, and releaseLedger unpersists it), the re-rooted
+    * leaf consumers receive, and the summaries computed over that leaf,
+    * keyed by regime (`b31`). The summaries live and die with the entry. */
+  private final class Memo(val persisted: DataFrame) {
     // RE-ROOT before handing out: consumers receive a LogicalRDD leaf
     // over the persisted plan's compiled RDD, not the ~300-node ledger
     // subtree itself. Persisting dedups EXECUTION but not PLAN size —
@@ -683,9 +710,9 @@ object DomainPipeline {
     // consumer count (the q75 disease, same cure as connectedComponents).
     // Measured: q86 9.5 s → ~1 s at sf0.1. The leaf scans the cached
     // blocks as internal rows, with no Row round-trip. Compiling its RDD
-    // is NOT lazy: adaptive execution runs every shuffle stage of the
-    // build here (the first call to `ledger` pays them); the cache itself
-    // fills on the first read. Lazy, so that work runs outside buildLock.
+    // is NOT lazy: adaptive execution runs every stage of the build here,
+    // the cache fill included (the first call to `ledger` pays them).
+    // Lazy, so that work runs outside buildLock.
     lazy val rooted: DataFrame = GraftBridge.reroot(persisted)
 
     // guarded by buildLock
@@ -701,7 +728,7 @@ object DomainPipeline {
 
     def release(): Unit = {
       released = true
-      (persisted +: edge +: summaries.values.toSeq).foreach(_.unpersist(false))
+      (persisted +: summaries.values.toSeq).foreach(_.unpersist(false))
     }
   }
 
@@ -719,7 +746,7 @@ object DomainPipeline {
     memo(s, dir, irbMode).rooted
 
   /** The live memo entry for the key, built if absent or evicted; a stale
-    * entry is released (its edge and summaries with it). */
+    * entry is released (its summaries with it). */
   private def memo(s: SparkSession, dir: String, irbMode: Boolean): Memo = {
     val key = (s, dir, irbMode)
     // Check-then-act must be atomic: the REST server executes requests
@@ -733,9 +760,8 @@ object DomainPipeline {
         .filter(_.persisted.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
         .getOrElse {
           ledgerMemo.get(key).foreach(_.release())
-          val (led, edge) = buildLedger(s, dir, irbMode)
-          val entry = new Memo(
-            led.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK), edge)
+          val entry = new Memo(buildLedger(s, dir, irbMode)
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
           ledgerMemo.put(key, entry)
           entry
         }
@@ -748,7 +774,7 @@ object DomainPipeline {
 
   /** Test hook: the PERSISTED (un-rooted) ledger handle, if memoised —
     * the frame whose QueryExecution carries the real build plan (broadcast
-    * joins, the materialised CRM edge) and whose storageLevel reflects
+    * joins, the one CRM exchange) and whose storageLevel reflects
     * cache liveness. Consumers never see this frame; specs asserting
     * plan-shape promises inspect it here. */
   private[graft] def persistedHandle(
@@ -756,7 +782,7 @@ object DomainPipeline {
     ledgerMemo.get((s, dir, irbMode)).map(_.persisted)
 
   /** Release one memoised ledger edge: drop the memo entry and unpersist
-    * the ledger, the CRM edge its build persisted and its summaries.
+    * the ledger and its summaries.
     * Long-lived callers (the REST run store) call this on eviction so the
     * Spark cache does not grow without bound; `unpersist` on an already-evicted frame is a no-op. */
   def releaseLedger(s: SparkSession, dir: String, irbMode: Boolean = true): Unit =
@@ -766,29 +792,29 @@ object DomainPipeline {
     * re-root). */
   private[graft] def rawLedgerPlan(
       s: SparkSession, dir: String, irbMode: Boolean = true): DataFrame =
-    buildLedger(s, dir, irbMode)._1
+    buildLedger(s, dir, irbMode)
 
-  /** The un-memoised ledger plan (the composition itself), with the CRM
-    * input it persisted — the caller owns that persist and releases it. */
-  private def buildLedger(
-      s: SparkSession, dir: String, irbMode: Boolean): (DataFrame, DataFrame) = {
+  /** The un-memoised ledger plan (the composition itself). Every frame in
+    * it is read once: the CRM waterfall takes its input through one
+    * exchange (see [[crmWaterfall]]), so the plan persists nothing and
+    * the upstream chain (scan → enrich → group/provision windows) runs
+    * once per ledger action. */
+  private def buildLedger(s: SparkSession, dir: String, irbMode: Boolean): DataFrame = {
     val exp = exposuresUnified(s, dir)
     val cpty = counterparties(s, dir)
     val h = hierarchy(enrichFx(exp, cpty))
     val cls = classify(h, modelPermissions(s, dir), irbMode)
-    // The CRM input is consumed twice in one plan: the exposure spine and
-    // the EAD lookup of the unified collateral/guarantee item book.
-    // Catalyst does not CSE across join branches, so without
-    // materialisation the entire upstream chain (scan → enrich →
-    // rating/group/provision windows → rule joins) executes once per
-    // branch per ledger action. The persist is the reference's materialised
-    // stage edge (`engine/materialise.py:220-243`) re-expressed —
-    // MEMORY_AND_DISK so a 100 TB book spills instead of recomputing.
-    // Measured at sf0.1: q94 6.0s → ~2.5s, q106 6.1s → ~2s.
     val withRw = ownRiskWeight(eadCalc(cls, provisions(s, dir)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val crm = crmWaterfall(withRw, collateral(s, dir), guarantees(s, dir))
-    (auditColumns(rwaCalc(crm)), withRw)
+    // A stage boundary between the waterfall's sort and the cache fill:
+    // every job that reads the cached ledger serializes the lineage of
+    // the stage that filled the cache, and a stage that sorts carries the
+    // whole upstream physical plan in it (the sort operator is a
+    // generated-code reference) — 420 KB per read at sf0.01 against
+    // 60 KB behind this shuffle, which slowed each ledger read by ~50 ms.
+    // The key differs from the waterfall's exposure key because a
+    // repartition on the child's own partitioning is planned away.
+    auditColumns(rwaCalc(crm.repartition(col("counterparty_reference"))))
   }
 
   /** The (class, approach) roll-up of a ledger frame with portfolio
@@ -829,13 +855,10 @@ object DomainPipeline {
   }
 
   /** The same pipeline as Orchestrator stages with materialised edges —
-    * execution-mode parity is asserted by DomainPipelineSpec. The CRM
-    * input is an edge of its own, sealed ahead of the ledger built from it
-    * (read twice — see [[buildLedger]]). */
+    * execution-mode parity is asserted by DomainPipelineSpec. */
   def stages(s: SparkSession, dir: String): (Seq[Stage], ArtifactKey[DataFrame]) = {
     val kEnriched = ArtifactKey[DataFrame]("enriched")
     val kClassified = ArtifactKey[DataFrame]("classified")
-    val kCrmInput = ArtifactKey[DataFrame]("crm_input")
     val kLedger = ArtifactKey[DataFrame]("ledger")
     val kSummary = ArtifactKey[DataFrame]("summary")
     val sts = Seq(
@@ -856,11 +879,10 @@ object DomainPipeline {
         def name = "calc_crm_rwa"
         def run(ctx: PipelineContext) = {
           val withRw = ownRiskWeight(eadCalc(ctx.get(kClassified), provisions(s, dir)))
-          ctx.put(kCrmInput, withRw).put(kLedger,
-            auditColumns(rwaCalc(
-              crmWaterfall(withRw, collateral(s, dir), guarantees(s, dir)))))
+          ctx.put(kLedger, auditColumns(rwaCalc(
+            crmWaterfall(withRw, collateral(s, dir), guarantees(s, dir)))))
         }
-        override def edgeFrames = Seq(kCrmInput, kLedger)
+        override def edgeFrames = Seq(kLedger)
       },
       new Stage {
         def name = "aggregate"

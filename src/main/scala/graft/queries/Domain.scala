@@ -3272,7 +3272,7 @@ object Domain {
       // The scoped bundle edges are multi-consumer (cpty feeds the
       // exposure semi-join, the provision union AND enrichFx; exp feeds
       // enrichFx and — via expKeys — the collateral/guarantee/provision
-      // semi-joins; withRw feeds both reads of the CRM waterfall).
+      // semi-joins; the CRM waterfall reads its input once).
       // Catalyst does not CSE across join branches, so unpersisted the
       // counterparty chain executed 27× and the exposure-unify chain 10×
       // per run (scan counts from
@@ -3303,7 +3303,6 @@ object Domain {
       val cls = DomainPipeline.classify(h, DomainPipeline.modelPermissions(s, dir))
       val ead = DomainPipeline.eadCalc(cls, prov)
       val withRw = DomainPipeline.ownRiskWeight(ead)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val crm = DomainPipeline.crmWaterfall(withRw, coll, guar)
       val led = DomainPipeline.rwaCalc(crm)
       led.groupBy(col("exposure_class"), col("approach"))

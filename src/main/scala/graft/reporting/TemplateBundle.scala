@@ -1,5 +1,6 @@
 package graft.reporting
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The run's generated-template bundle (reference
@@ -33,19 +34,24 @@ object TemplateBundle {
 
   private final class Lazy[A](thunk: () => A) { lazy val value: A = thunk() }
 
-  // one release hook per session: collected sheets die with the app so
-  // harnesses that cycle sessions cannot accumulate every session's rows
+  // one release hook per SparkContext: collected sheets die with the app,
+  // so harnesses that cycle sessions cannot accumulate every session's
+  // rows. The hook holds the context, never a session: a listener per
+  // session grew the listener bus by one per session and kept every
+  // session reachable from it.
   private val hooked = java.util.Collections.synchronizedSet(
     java.util.Collections.newSetFromMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
+      new java.util.WeakHashMap[SparkContext, java.lang.Boolean]()))
 
-  private def hookRelease(s: SparkSession): Unit =
-    if (hooked.add(s))
-      s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+  private def hookRelease(s: SparkSession): Unit = {
+    val sc = s.sparkContext
+    if (hooked.add(sc))
+      sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
         override def onApplicationEnd(
             e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-          releaseSession(s)
+          memo.keys.filter(_._1.sparkContext eq sc).foreach(memo.remove)
       })
+  }
 
   /** The generated frame for `name`, building (and collecting) it on
     * first use per (session, dir) — concurrent first readers build once. */

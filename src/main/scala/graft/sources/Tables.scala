@@ -1,28 +1,65 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types._
 
 /** Parquet table loaders for the repo harness star schema (TESTDATA.md).
   *
   * Mirrors the reference's loader discipline (reference
   * `engine/loader.py:814-876` ParquetLoader): one lazy scan per table, schema
   * known up front, column pruning + predicate pushdown left to Catalyst.
+  * The seven star tables read with their declared [[schemas]], so a scan
+  * starts no footer-reading job; the other tables infer theirs.
   * At 100 TB each of these would be a partitioned parquet dataset; the
   * single-file read here generalises unchanged (`spark.read.parquet(dir)`).
   */
 object Tables {
-  /** Memoised scan frames: `spark.read.parquet` re-reads footers and
-    * re-resolves the file index on EVERY call (ResolveDataSource measured
-    * 1.7 s of a cold ledger build across ~10 reads), and every caller then
-    * re-analyses an identical scan subtree. A DataFrame is immutable, so
+
+  private def fields(fs: (String, DataType)*): StructType =
+    StructType(fs.map { case (n, t) => StructField(n, t) })
+
+  /** The star tables' schemas, exactly as parquet inference reads them from
+    * every book (TablesSpec checks each against inference): INT64
+    * `TIMESTAMP_MICROS` dates without a UTC adjustment are `timestamp_ntz`,
+    * and every column is nullable. Inference costs one Spark job per table
+    * per session (it reads the footer on an executor); a declared schema
+    * costs none. */
+  val schemas: Map[String, StructType] = Map(
+    "region" -> fields("r_regionkey" -> IntegerType, "r_name" -> StringType),
+    "nation" -> fields("n_nationkey" -> IntegerType, "n_name" -> StringType,
+      "n_regionkey" -> IntegerType),
+    "customer" -> fields("c_custkey" -> LongType, "c_name" -> StringType,
+      "c_nationkey" -> IntegerType, "c_acctbal" -> DoubleType,
+      "c_mktsegment" -> StringType),
+    "supplier" -> fields("s_suppkey" -> LongType, "s_name" -> StringType,
+      "s_nationkey" -> IntegerType, "s_acctbal" -> DoubleType),
+    "part" -> fields("p_partkey" -> LongType, "p_name" -> StringType,
+      "p_brand" -> StringType, "p_type" -> StringType, "p_size" -> IntegerType,
+      "p_retailprice" -> DoubleType),
+    "orders" -> fields("o_orderkey" -> LongType, "o_custkey" -> LongType,
+      "o_orderstatus" -> StringType, "o_totalprice" -> DoubleType,
+      "o_orderdate" -> TimestampNTZType, "o_orderpriority" -> StringType),
+    "lineitem" -> fields("l_orderkey" -> LongType, "l_partkey" -> LongType,
+      "l_suppkey" -> LongType, "l_linenumber" -> IntegerType,
+      "l_quantity" -> DoubleType, "l_extendedprice" -> DoubleType,
+      "l_discount" -> DoubleType, "l_tax" -> DoubleType,
+      "l_returnflag" -> StringType, "l_linestatus" -> StringType,
+      "l_shipdate" -> TimestampNTZType))
+
+  /** Memoised scan frames: `spark.read.parquet` re-resolves the file index
+    * on EVERY call (ResolveDataSource measured 1.7 s of a cold ledger build
+    * across ~10 reads), and every caller then re-analyses an identical
+    * scan subtree. A DataFrame is immutable, so
     * handing back the same object is free sharing — same discipline as the
     * reference's one-loader-instance-per-run (`engine/loader.py:814-876`). */
   private val memo =
     scala.collection.concurrent.TrieMap[(SparkSession, String, String), DataFrame]()
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    memo.getOrElseUpdate((spark, sfDir, name),
-      spark.read.parquet(s"$sfDir/$name.parquet"))
+    memo.getOrElseUpdate((spark, sfDir, name), {
+      val reader = schemas.get(name).fold(spark.read)(spark.read.schema)
+      reader.parquet(s"$sfDir/$name.parquet")
+    })
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")

@@ -6,13 +6,18 @@
  */
 package org.apache.spark.sql
 
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, KnownNotNull}
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.LogicalRDD
 
 object GraftBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** `c` declared non-nullable, with no runtime check: for a column the
+    * caller knows holds no null where the analyser cannot see it (a
+    * filter that keeps only rows where it was non-nullable). */
+  def knownNotNull(c: Column): Column = column(KnownNotNull(expression(c)))
 
   /** If `c` is an explicit sort-order column (`.asc`/`.desc`/the nulls
     * variants), its (isAscending, isNullsFirst). None for a bare column
@@ -32,9 +37,9 @@ object GraftBridge {
     * `createDataFrame(df.rdd, df.schema)` nothing converts them to
     * external `Row`s and back. When `df` is persisted the RDD scans its
     * cached blocks. Compiling the RDD is not free: under adaptive
-    * execution it runs every shuffle stage of the plan (for a persisted
-    * `df`, of the plan that fills the cache); only the final stage waits
-    * for the first read. */
+    * execution it runs every shuffle stage of the plan; for a persisted
+    * `df` it runs the plan that fills the cache and the fill itself, so
+    * the first read only scans the blocks. */
   def reroot(df: DataFrame): DataFrame = {
     val s = df.sparkSession.asInstanceOf[classic.SparkSession]
     val qe = df.queryExecution

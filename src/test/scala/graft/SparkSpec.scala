@@ -4,17 +4,13 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** Shared local SparkSession for specs. One session per suite (Spark reuses
-  * the underlying context across suites in the same JVM via getOrCreate).
+/** Shared local SparkSession for specs, built like the command-line mains'
+  * ([[LocalSession]]). One session per suite (Spark reuses the underlying
+  * context across suites in the same JVM via getOrCreate).
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  lazy val spark: SparkSession = LocalSession.builder()
     .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
     .config("spark.sql.extensions", "graft.GraftExtensions")
     .getOrCreate()
 

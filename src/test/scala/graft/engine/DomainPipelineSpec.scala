@@ -15,12 +15,15 @@ class DomainPipelineSpec extends SparkSpec {
   private val sfDir = "/root/testdata/sf0.001"
 
   test("orchestrated stage fold equals the lazy single-plan summary") {
+    def persisted = spark.sparkContext.getPersistentRDDs.size
     val lazySummary = DomainPipeline.summary(spark, sfDir).collect().toSeq
+    val withMemo = persisted
     // the fold's edges share plans with the memo's, and a plan is cached
     // once: release the memo so the fold's own persists can be counted
     DomainPipeline.releaseLedger(spark, sfDir)
-    def persisted = spark.sparkContext.getPersistentRDDs.size
     val before = persisted
+    // the memo held the ledger and its summary: its build persists no edge
+    assert(withMemo - before == 2, s"${withMemo - before} RDDs held by the memo")
     val (stages, kSummary) = DomainPipeline.stages(spark, sfDir)
     val ctx = Orchestrator.runStages(stages, PipelineContext())
     val orchestrated = ctx.get(kSummary).collect().toSeq

@@ -1,5 +1,7 @@
 package graft.engine
 
+import org.apache.spark.ListenerBusBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LocalRelation}
 import org.apache.spark.sql.classic
@@ -53,7 +55,7 @@ class LedgerMemoSpec extends SparkSpec {
     DomainPipeline.releaseLedger(spark, sfDir)
   }
 
-  test("releaseLedger unpersists the ledger, its edges and its summaries") {
+  test("releaseLedger unpersists the ledger and its summaries") {
     DomainPipeline.releaseLedger(spark, sfDir)
     val before = spark.sparkContext.getPersistentRDDs.size
     for (fw <- Seq("CRR", "BASEL_3_1")) {
@@ -63,9 +65,33 @@ class LedgerMemoSpec extends SparkSpec {
       res.summary.get.collect()
       res.ledger.get.count()
     }
-    assert(spark.sparkContext.getPersistentRDDs.size > before)
+    // the ledger and one summary per regime: the build persists no edge
+    val held = spark.sparkContext.getPersistentRDDs.size - before
+    assert(held == 3, s"$held persisted RDDs")
     DomainPipeline.releaseLedger(spark, sfDir)
     assert(spark.sparkContext.getPersistentRDDs.size == before)
+  }
+
+  test("calculate() in a fresh session starts at most 14 Spark jobs") {
+    // the cache is shared by sessions: a plan cached by an earlier test
+    // would let the build skip its stages
+    spark.catalog.clearCache()
+    val s = spark.newSession()
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerBusBridge.drain(sc)
+    sc.addSparkListener(counter)
+    try {
+      assert(new CreditRiskCalc(s, CalcConfig(sfDir, permissionMode = "irb"))
+        .calculate().success)
+      ListenerBusBridge.drain(sc)
+    } finally sc.removeSparkListener(counter)
+    info(s"${jobs.get} Spark jobs")
+    assert(jobs.get <= 14, s"${jobs.get} jobs")
+    DomainPipeline.releaseLedger(s, sfDir)
   }
 
   test("the ledger build joins no constant rule table") {

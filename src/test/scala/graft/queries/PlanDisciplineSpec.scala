@@ -87,18 +87,29 @@ class PlanDisciplineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
   }
 
-  test("the CRM stage edge is materialised (ledger consumed once, not thrice)") {
-    // the ledger build persists the CRM input: the exposure spine and the
-    // CRM item lookup must both read the SAME in-memory relation rather
-    // than re-executing the upstream chain per consumer. The edge is
-    // visible in the ledger BUILD plan (consumers see only the re-rooted
-    // leaf), which is the cached plan of the ledger's own relation.
+  test("the ledger build reads its CRM input once: no persisted edge, no extra orders scan") {
+    // The CRM waterfall takes its input through one exchange, so the
+    // ledger BUILD plan (consumers see only the re-rooted leaf; the build
+    // is the cached plan of the ledger's own relation) holds no
+    // InMemoryRelation, and the upstream chain runs once: the build scans
+    // `orders` exactly as often as the exposure book alone does (once per
+    // branch of its loan/facility union) — a second reader of the CRM
+    // input would re-run that chain and double the count.
+    import org.apache.spark.sql.execution.FileSourceScanExec
     SparkEntry.queries("q90_domain_pipeline")(spark, sfDir).collect()
     val build = graft.engine.DomainPipeline.persistedHandle(spark, sfDir).get
       .queryExecution.optimizedPlan.collectFirst { case r: InMemoryRelation => r.cachedPlan }.get
-    val reads = collect(build) { case s: InMemoryTableScanExec => s.relation.cacheBuilder }
-    assert(reads.size >= 2 && reads.distinct.size == 1,
-      s"ledger build should read the persisted CRM edge:\n${build.toString.take(2000)}")
+    val cached = collect(build) { case s: InMemoryTableScanExec => s }
+    assert(cached.isEmpty, s"ledger build reads a persisted frame:\n${build.toString.take(2000)}")
+    def ordersScans(plan: org.apache.spark.sql.execution.SparkPlan) = collect(plan) {
+      case s: FileSourceScanExec if s.relation.location.rootPaths.exists(_.getName == "orders.parquet") => s
+    }.size
+    val exposures = graft.engine.DomainPipeline.exposuresUnified(spark, sfDir)
+    exposures.collect()
+    val perBook = ordersScans(exposures.queryExecution.executedPlan)
+    assert(perBook >= 1 && ordersScans(build) == perBook,
+      s"ledger build scans orders ${ordersScans(build)}x, the exposure book $perBook x:\n" +
+        build.toString.take(2000))
   }
 
   test("worklists are distributed top-k, not single-partition sort windows (q93)") {
