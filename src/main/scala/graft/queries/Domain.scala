@@ -1122,8 +1122,9 @@ object Domain {
 
   /** q94: COREP sheet content + supervisory validations — the whole
     * C 07.00-style sheet (class rows, RWEA leg columns, and the
-    * risk-weight band memo block — 82 cells) is ONE
-    * conditional-aggregation pass over the composed q90 ledger, then
+    * risk-weight band memo block — 82 cells) is ONE two-level
+    * conditional aggregation over the composed q90 ledger (11 decimal
+    * sums per ledger row, one per distinct measure), then
     * every cross-cell rule — the
     * engine's own identities AND the ported EBA catalogue slice
     * (`corepCatalogue`, ids + severities in the output frame) — evaluates

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.engine.DomainPipeline
@@ -102,8 +103,9 @@ object Pillar3 {
     * Scale shape: one projection over the persisted ledger, a broadcast
     * 18-row band range-join (each row lands in ≤4 bands), ONE shuffle
     * for the groupBy — the sheet is a single aggregation pass regardless
-    * of book size. Weighted numerators quantise per-row (q2) and sum at
-    * scale 2 per the dsum magnitude rule.
+    * of book size; the fixed axis left-joins the broadcast aggregate.
+    * Weighted numerators quantise per-row (q2) and sum at scale 2 per
+    * the dsum magnitude rule.
     */
   val q120Pillar3Cr6 = QueryDef(
     "q120_pillar3_cr6",
@@ -150,14 +152,13 @@ object Pillar3 {
           dsum(col("rwea_leg"), 2).as("rwea"),
           dsum(q2(col("pd_floored") * col("lgd_floored") * col("ead")), 2)
             .as("expected_loss"))
-      val axis = broadcast(
-        (for {
+      val axis = (for {
           (f, _) <- pdFloorByFramework
           c <- irbClasses
           (ref, label, _, _) <- cr6Bands
         } yield (f, c, ref, label))
-          .toDF("framework", "exposure_class", "row_ref", "pd_range"))
-      axis.join(agg, Seq("framework", "exposure_class", "row_ref"), "left")
+        .toDF("framework", "exposure_class", "row_ref", "pd_range")
+      axis.join(broadcast(agg), Seq("framework", "exposure_class", "row_ref"), "left")
         .select(
           col("framework"), col("exposure_class"), col("row_ref"),
           col("pd_range"), col("n_exposures"), col("n_obligors"),
@@ -174,6 +175,7 @@ object Pillar3 {
           when(col("ead_total") > 0, q6(col("rwea") / col("ead_total")))
             .as("rwa_density"),
           col("expected_loss"))
+        .coalesce(1)
         .orderBy(col("framework"), col("exposure_class"), col("row_ref"))
     },
     Some(s"""
@@ -370,6 +372,7 @@ object Pillar3 {
           coalesce(col("exposure_class"), lit("TOTAL")).as("exposure_class"),
           col("n_exposures"), col("pre_cd_rwea"), col("actual_rwea"),
           q2(col("pre_cd_rwea") - col("actual_rwea")).as("crm_effect"))
+        .coalesce(1)
         .orderBy(col("framework"), col("exposure_class"))
     },
     Some(s"""
@@ -400,6 +403,27 @@ object Pillar3 {
       ORDER BY framework, exposure_class
     """.stripMargin.trim))
 
+  /** The non-ledger RWEA scalars OV1 and CMS1 report, each an existing
+    * battery query reduced to one value: q56's SA-CCR netting-set add-ons
+    * × α (1.4), q105's default-fund K_CM × 12.5, q96's reduced BA-CVA RWA
+    * and q97's Art. 378 settlement charge. Built once per (session, dir)
+    * as a 1-row frame through the run's [[graft.reporting.TemplateBundle]],
+    * so the second sheet reads the first one's result and
+    * `TemplateBundle.releaseSession` frees it with the session's sheets. */
+  private[graft] def ccrComponents(s: SparkSession, dir: String): DataFrame =
+    graft.reporting.TemplateBundle.generated(s, dir, "ccr_components", {
+      val ccr = Ccr.q56SaCcrAddon.build(s, dir)
+        .agg(dsum(q2(col("ns_addon") * 1.4), 2).as("ccr_rwea"))
+      val dfund = Ccr.q105DefaultFund.build(s, dir)
+        .agg(dsum(col("total_rwea"), 2).as("dfund_rwea"))
+      val cva = Ccr.q96BaCva.build(s, dir)
+        .select(col("cva_rwa").as("cva_rwea"))
+      val settle = Ccr.q97FailedTrades.build(s, dir)
+        .agg(dsum(col("total_rwa"), 4).as("settle_rwea"))
+      ccr.crossJoin(broadcast(dfund)).crossJoin(broadcast(cva))
+        .crossJoin(broadcast(settle))
+    })
+
   /** q130: Pillar-3 OV1 — overview of RWEAs (reference
     * `reporting/pillar3/ov1.py`, CRR Art. 438(d)): the one-page roll-up a
     * disclosure reader opens first, one row per risk type with the RWEA
@@ -418,10 +442,11 @@ object Pillar3 {
     * oracle embeds those queries' own oracle SQL as subqueries — the
     * sheet is provably consistent with the queries it summarises, in
     * both engines. Scale shape: the ledger row is ONE conditional
-    * aggregation over the persisted ledger; every other component
-    * aggregates to a 1-row frame before the broadcast cross-join; the
-    * Total row sums horizontally on the wide row (decimal-exact), so
-    * the whole sheet adds no data-sized shuffle beyond its components.
+    * aggregation over the persisted ledger; the other components come as
+    * one 1-row frame built once per session ([[ccrComponents]], shared
+    * with q132) and broadcast into the cross-join; the Total row sums
+    * horizontally on the wide row (decimal-exact), so the whole sheet
+    * adds no data-sized shuffle beyond its components.
     */
   val q130Ov1Overview = QueryDef(
     "q130_ov1_overview",
@@ -435,20 +460,10 @@ object Pillar3 {
           .as("irb_crr"),
         dsum(when(col("approach") === "IRB", col("rwa_b31")).otherwise(0.0), 2)
           .as("irb_b31"))
-      val ccr = Ccr.q56SaCcrAddon.build(s, dir)
-        .agg(dsum(q2(col("ns_addon") * 1.4), 2).as("ccr_rwea"))
-      val dfund = Ccr.q105DefaultFund.build(s, dir)
-        .agg(dsum(col("total_rwea"), 2).as("dfund_rwea"))
-      val cva = Ccr.q96BaCva.build(s, dir)
-        .select(col("cva_rwa").as("cva_rwea"))
-      val settle = Ccr.q97FailedTrades.build(s, dir)
-        .agg(dsum(col("total_rwa"), 4).as("settle_rwea"))
-      def hsum(cols: Seq[String]): org.apache.spark.sql.Column =
+      def hsum(cols: Seq[String]): Column =
         cols.map(c => col(c).cast(DecimalType(38, 4))).reduce(_ + _)
           .cast("double")
-      val wide = credit
-        .crossJoin(broadcast(ccr)).crossJoin(broadcast(dfund))
-        .crossJoin(broadcast(cva)).crossJoin(broadcast(settle))
+      val wide = credit.crossJoin(broadcast(ccrComponents(s, dir)))
         .withColumn("tot_crr", hsum(Seq(
           "sa_crr", "irb_crr", "ccr_rwea", "dfund_rwea", "cva_rwea",
           "settle_rwea")))
@@ -557,15 +572,16 @@ object Pillar3 {
     * Scale shape: one projection over the persisted ledger slice, the
     * category/EL chains are codegen when-chains (no join), ONE ROLLUP
     * shuffle emits the category rows AND the two maturity Totals
-    * together, then a broadcast 12-row axis left-join pins the grid.
+    * together, then the 12-row axis left-joins the broadcast roll-up to
+    * pin the grid.
     */
   val q131Cr10Slotting = QueryDef(
     "q131_cr10_slotting",
     (s, dir) => {
       import s.implicits._
       import graft.engine.Slotting
-      val axis = broadcast(
-        cr10Axis.toDF("row_ref", "slotting_category", "maturity_band", "fixed_rw_pct"))
+      val axis =
+        cr10Axis.toDF("row_ref", "slotting_category", "maturity_band", "fixed_rw_pct")
       val k = expr("CAST(substring(exposure_reference, 5) AS BIGINT)")
       val slot = DomainPipeline.ledger(s, dir)
         .filter(col("approach") === "IRB" && col("exposure_class") === "corporate")
@@ -581,7 +597,7 @@ object Pillar3 {
           Slotting.riskWeight(col("slotting_category"), col("res_maturity")))
         .withColumn("el_rate",
           Slotting.elRate(col("slotting_category"), col("res_maturity")))
-      val rolled = slot
+      val rolled = broadcast(slot
         .withColumn("is_short", col("res_maturity") < 2.5)
         .rollup(col("is_short"), col("slotting_category"))
         .agg(
@@ -592,7 +608,7 @@ object Pillar3 {
           dsum(q2(col("ead_pre_crm") * col("slot_rw")), 2).as("rwea"),
           dsum(q2(col("ead_pre_crm") * col("el_rate")), 2).as("expected_loss"))
         .filter(col("is_short").isNotNull)
-        .withColumn("cat_key", coalesce(col("slotting_category"), lit("TOTAL")))
+        .withColumn("cat_key", coalesce(col("slotting_category"), lit("TOTAL"))))
       axis
         .join(rolled,
           axis("slotting_category") === rolled("cat_key") &&
@@ -605,6 +621,7 @@ object Pillar3 {
           coalesce(col("gross_on_bs"), lit(0.0)).as("gross_on_bs"),
           coalesce(col("gross_off_bs"), lit(0.0)).as("gross_off_bs"),
           col("exposure_value"), col("rwea"), col("expected_loss"))
+        .coalesce(1)
         .orderBy(col("row_ref"))
     },
     Some {
@@ -741,10 +758,11 @@ object Pillar3 {
     * the ledger's standardised weights side by side. COMPOSITION like
     * OV1: the CCR row embeds q56/q105's own oracle SQL, so the sheet is
     * provably consistent with the queries it summarises. Scale shape:
-    * ONE conditional aggregation over the persisted ledger; CCR
-    * components aggregate to 1-row frames before broadcast cross-joins;
-    * the total sums horizontally — no data-sized shuffle beyond the
-    * components' own.
+    * ONE conditional aggregation over the persisted ledger; the CCR
+    * components are q130's 1-row frame ([[ccrComponents]]), read from
+    * the session's bundle when OV1 ran first, and broadcast into the
+    * cross-join; the total sums horizontally — no data-sized shuffle
+    * beyond the components' own.
     */
   val q132Cms1 = QueryDef(
     "q132_cms1",
@@ -754,15 +772,12 @@ object Pillar3 {
         dsum(when(!col("is_modelled"), col("rwa_b31")).otherwise(0.0), 2)
           .as("b_credit"),
         dsum(col("rwa_b31"), 2).as("d_credit"))
-      val ccr = Ccr.q56SaCcrAddon.build(s, dir)
-        .agg(dsum(q2(col("ns_addon") * 1.4), 2).as("ccr_saccr"))
-      val dfund = Ccr.q105DefaultFund.build(s, dir)
-        .agg(dsum(col("total_rwea"), 2).as("ccr_dfund"))
-      def h2(cols: Seq[org.apache.spark.sql.Column]): org.apache.spark.sql.Column =
+      def h2(cols: Seq[Column]): Column =
         cols.map(_.cast(DecimalType(38, 2))).reduce(_ + _).cast("double")
       val wide = credit
-        .crossJoin(broadcast(ccr)).crossJoin(broadcast(dfund))
-        .withColumn("b_ccr", h2(Seq(col("ccr_saccr"), col("ccr_dfund"))))
+        .crossJoin(broadcast(ccrComponents(s, dir)
+          .select(col("ccr_rwea"), col("dfund_rwea"))))
+        .withColumn("b_ccr", h2(Seq(col("ccr_rwea"), col("dfund_rwea"))))
         .withColumn("a_tot", col("a_credit"))
         .withColumn("b_tot", h2(Seq(col("b_credit"), col("b_ccr"))))
         .withColumn("d_tot", h2(Seq(col("d_credit"), col("b_ccr"))))
@@ -864,7 +879,7 @@ object Pillar3 {
     "q133_cms2",
     (s, dir) => {
       val led = withModelledRwa(DomainPipeline.ledger(s, dir))
-      def h2(cols: Seq[org.apache.spark.sql.Column]): org.apache.spark.sql.Column =
+      def h2(cols: Seq[Column]): Column =
         cols.map(_.cast(DecimalType(38, 2))).reduce(_ + _).cast("double")
       led.rollup(col("exposure_class"))
         .agg(
@@ -880,6 +895,7 @@ object Pillar3 {
           col("n_exposures"), col("rwea_modelled"), col("sa_equiv_modelled"),
           h2(Seq(col("rwea_modelled"), col("sa_actual"))).as("rwea_total"),
           col("sa_equiv_total"))
+        .coalesce(1)
         .orderBy(col("exposure_class"))
     },
     Some(s"""
@@ -922,25 +938,24 @@ object Pillar3 {
     * subsets partition the row); the roll-out-plan percentage is the
     * recorded constant 0.0 — roll-out plans are not pipeline data. Empty
     * class rows report a/b = 0.0 with null percentages. One conditional
-    * ROLLUP pass over the persisted ledger; the 6-row axis is a
-    * broadcast left-join.
+    * ROLLUP pass over the persisted ledger; the 6-row axis left-joins
+    * the broadcast roll-up.
     */
   val q137Cr6aScope = QueryDef(
     "q137_cr6a_scope",
     (s, dir) => {
       import s.implicits._
-      val axis = broadcast(
-        (originClasses.zipWithIndex.map { case (c, i) => (i + 1, c) } :+
+      val axis = (originClasses.zipWithIndex.map { case (c, i) => (i + 1, c) } :+
           ((originClasses.size + 1, "TOTAL")))
-          .toDF("row_ref", "exposure_class"))
-      val rolled = DomainPipeline.ledger(s, dir)
+        .toDF("row_ref", "exposure_class")
+      val rolled = broadcast(DomainPipeline.ledger(s, dir)
         .rollup(col("exposure_class"))
         .agg(
           dsum(when(col("approach") === "IRB", col("ead_pre_crm"))
             .otherwise(0.0), 2).as("ead_irb"),
           dsum(col("ead_pre_crm"), 2).as("ead_total"))
         .withColumn("cls_key", coalesce(col("exposure_class"), lit("TOTAL")))
-        .drop("exposure_class")
+        .drop("exposure_class"))
       axis.join(rolled, axis("exposure_class") === rolled("cls_key"), "left")
         .select(
           axis("row_ref"), axis("exposure_class"),
@@ -952,6 +967,7 @@ object Pillar3 {
             q6((col("ead_total") - col("ead_irb")) / col("ead_total") * 100))
             .as("pct_sa"),
           when(col("ead_total") > 0, lit(0.0)).as("pct_rollout"))
+        .coalesce(1)
         .orderBy(col("row_ref"))
     },
     Some {
@@ -1009,7 +1025,7 @@ object Pillar3 {
         dsum(when(!col("is_modelled"), col("rwa_b31")).otherwise(0.0), 2)
           .as("rwa_standardised_only"),
         dsum(col("rwa_b31"), 2).as("s_trea"))
-      def h2(cols: Seq[org.apache.spark.sql.Column]): org.apache.spark.sql.Column =
+      def h2(cols: Seq[Column]): Column =
         cols.map(_.cast(DecimalType(38, 2))).reduce(_ + _).cast("double")
       agg
         .withColumn("rwa_total",
@@ -1082,6 +1098,7 @@ object Pillar3 {
           col("ead_secured"), col("secured_financial"),
           col("secured_real_estate"), col("secured_other_physical"),
           col("secured_guarantees"))
+        .coalesce(1)
         .orderBy(col("exposure_class"))
     },
     Some(s"""
@@ -1131,7 +1148,8 @@ object Pillar3 {
     * Scale shape: the scope is a pushed-down Column filter (no shuffle);
     * the sheet is ONE rollup over the scoped frame (class rows + total
     * from a single shuffle); the memo census aggregates the excluded
-    * legs straight off the orders scan.
+    * legs straight off the orders scan, without the ledger; the few
+    * output rows are sorted in one partition.
     */
   val q157SaScope = QueryDef(
     "q157_sa_scope",
@@ -1183,7 +1201,7 @@ object Pillar3 {
             q6(col("rwea") / (col("ead_on_bs") + col("ead_off_bs"))))
             .as("rwea_density"),
           lit(null).cast("double").as("excluded_ead"))
-      val memo = population
+      val memo = legs
         .filter(col("exposure_type").isin(SaScope.excludedExposureTypes: _*))
         .groupBy(col("exposure_type"))
         .agg(count(lit(1)).as("n_rows"),
@@ -1198,7 +1216,7 @@ object Pillar3 {
           lit(null).cast("double").as("rwea"),
           lit(null).cast("double").as("rwea_density"),
           col("excluded_ead"))
-      sheet.unionByName(memo).orderBy(col("row_id"))
+      sheet.unionByName(memo).coalesce(1).orderBy(col("row_id"))
     },
     Some(s"""
       WITH ${Domain.domainLedgerCtes},
@@ -1284,29 +1302,28 @@ object Pillar3 {
     *    guarantor's leg from an unrated obligor counts unrated;
     *    unrated ≤ Total still holds, `cr5.py:41-53`).
     *
-    * Scale shape: three projected leg rows per ledger row (a column-fan
-    * select, no join), ONE rollup shuffle for class rows + total.
+    * Scale shape: three leg rows per ledger row from one scan (an
+    * explode of a 3-element array, no join, no union); the legs group
+    * by (class, weight, rated) with ONE decimal sum each, then ONE
+    * rollup over those few groups evaluates the 16 band sums for class
+    * rows + total; the output is sorted in one partition.
     */
   /** The CR5 per-CRM-leg fan over a (scoped) SA ledger frame — shared by
     * the q161 sheet build and the lineage cell drill. */
-  private[graft] def cr5Legs(led: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
+  private[graft] def cr5Legs(led: DataFrame): DataFrame = {
     val applied = col("guar_covered") > 0 && col("guarantor_rw").isNotNull &&
       col("guarantor_rw") < col("own_rw")
-    led.select(col("exposure_reference"),
-        col("exposure_class").as("row_class"),
-        lit(DomainPipeline.collateralRw).as("leg_rw"),
-        col("coll_covered").as("ev"), col("own_cqs"))
-      .unionByName(led.select(col("exposure_reference"),
-        when(applied, "institution").otherwise(col("exposure_class"))
-          .as("row_class"),
-        when(applied, col("guarantor_rw")).otherwise(col("own_rw"))
-          .as("leg_rw"),
-        col("guar_covered").as("ev"), col("own_cqs")))
-      .unionByName(led.select(col("exposure_reference"),
-        col("exposure_class").as("row_class"),
-        col("own_rw").as("leg_rw"),
-        col("unsecured").as("ev"), col("own_cqs")))
+    def leg(rowClass: Column, legRw: Column, ev: Column): Column =
+      struct(rowClass.as("row_class"), legRw.as("leg_rw"), ev.as("ev"))
+    led.select(col("exposure_reference"), col("own_cqs"), explode(array(
+        leg(col("exposure_class"), lit(DomainPipeline.collateralRw),
+          col("coll_covered")),
+        leg(when(applied, "institution").otherwise(col("exposure_class")),
+          when(applied, col("guarantor_rw")).otherwise(col("own_rw")),
+          col("guar_covered")),
+        leg(col("exposure_class"), col("own_rw"), col("unsecured")))).as("leg"))
+      .select(col("exposure_reference"), col("leg.row_class"),
+        col("leg.leg_rw"), col("leg.ev"), col("own_cqs"))
   }
 
   val q161Pillar3Cr5 = QueryDef(
@@ -1314,17 +1331,24 @@ object Pillar3 {
     (s, dir) => {
       val led = graft.operators.SaScope.saCreditRiskPopulation(
         DomainPipeline.ledger(s, dir).filter(col("approach") === "SA"))
+      // two levels (the TemplateGenerator.wideRow shape): each (class,
+      // weight, rated) group sums its legs once, then every band sums the
+      // groups on its weight — exact, as the band and rating predicates
+      // are constant within a group
       val legs = cr5Legs(led)
+        .groupBy(col("row_class"), col("leg_rw"), col("own_cqs").isNull.as("unrated"))
+        .agg(sum(col("ev").cast(DecimalType(38, 2))).as("ev"))
+      def dsumWhen(pred: Column): Column =
+        sum(when(pred, col("ev")).otherwise(lit(0).cast(DecimalType(38, 2))))
+          .cast("double")
       val bandAggs = cr5Bands.map { case (name, w) =>
-        dsum(when(abs(col("leg_rw") - w) < 0.005, col("ev")).otherwise(0.0), 2)
-          .as(name)
+        dsumWhen(abs(col("leg_rw") - w) < 0.005).as(name)
       }
       val rolled = legs.rollup(col("row_class"))
         .agg(bandAggs.head,
           (bandAggs.tail :+
-            dsum(col("ev"), 2).as("total_ev") :+
-            dsum(when(col("own_cqs").isNull, col("ev")).otherwise(0.0), 2)
-              .as("unrated_ev")): _*)
+            sum(col("ev")).cast("double").as("total_ev") :+
+            dsumWhen(col("unrated")).as("unrated_ev")): _*)
       val bandSum = cr5Bands.map { case (name, _) =>
         col(name).cast(DecimalType(38, 2)) }.reduce(_ + _).cast("double")
       rolled.select(
@@ -1332,6 +1356,7 @@ object Pillar3 {
           cr5Bands.map { case (name, _) => col(name) }) :+
           greatest(lit(0.0), col("total_ev") - bandSum).as("other_deducted") :+
           col("total_ev") :+ col("unrated_ev"): _*)
+        .coalesce(1)
         .orderBy(col("row_id"))
     },
     Some {

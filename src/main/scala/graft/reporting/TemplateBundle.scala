@@ -16,8 +16,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * sheets), so the local relation is the sanctioned presentation-grain
   * reduction; it is DERIVED data — a cache sweep cannot stale it, and
   * repeat consumers skip the whole re-analysis + re-execution of the
-  * sheet build. The template's own QueryDef keeps building fresh, so
-  * the driver's per-query benches measure real production cost.
+  * sheet build. A template's own QueryDef keeps building its sheet
+  * fresh, so the driver's per-query benches measure real production cost;
+  * the one exception is the CCR components OV1 and CMS1 share
+  * (`Pillar3.ccrComponents`), which both sheets read from here.
   */
 object TemplateBundle {
 

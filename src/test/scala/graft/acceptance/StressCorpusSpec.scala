@@ -235,12 +235,7 @@ object StressCorpus {
   def main(args: Array[String]): Unit = {
     val nDocs = sys.env.get("GRAFT_CORPUS_DOCS").flatMap(_.toLongOption)
       .getOrElse(3000000L)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val t0 = System.nanoTime()
     val tels = CorpusStress.run(spark, nDocs, println)

@@ -32,10 +32,11 @@ final case class StressContingent(contingent_reference: String,
 
 /** Bench-shaped scale probes (`Test/runMain graft.acceptance.Stress100K`
   * / `Stress1M`): stage the N-counterparty book to parquet, then time
-  * the sealed ledger's full-width materialisation on local[32] — the
-  * apples-to-apples read against BASELINE.md (100K: 4,313 ms full
-  * pipeline; 1M: the reference's `scale_1m` slow tier with its < 120 s
-  * SA target, `tests/benchmarks/test_pipeline_benchmark.py:246-283`).
+  * the sealed ledger's full-width materialisation on `LocalSession`'s
+  * local[N] (N = the host's cpus) — the apples-to-apples read against
+  * BASELINE.md (100K: 4,313 ms full pipeline; 1M: the reference's
+  * `scale_1m` slow tier with its < 120 s SA target,
+  * `tests/benchmarks/test_pipeline_benchmark.py:246-283`).
   * Each round also prints the SPILL and AQE-SKEW telemetry (TaskMetrics
   * disk/memory bytes spilled; skew-split joins in the final adaptive
   * plan) — at 1M this is the first scale where the 100 TB posture is
@@ -43,12 +44,7 @@ final case class StressContingent(contingent_reference: String,
   * envelope holds, zero skew splits means no key needed AQE rescue. */
 object StressProbe {
   def run(tag: String, nCp: Int, rounds: Int, modes: Seq[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val tb0 = System.nanoTime()
     val big = StressBook.buildBook(spark, seed = 7L, nCp = nCp)

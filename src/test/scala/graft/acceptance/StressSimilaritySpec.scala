@@ -243,12 +243,7 @@ object StressSimilarity {
     val nVecs = sys.env.get("GRAFT_SIM_VECS").flatMap(_.toLongOption)
       .getOrElse(2000000L)
     val dim = sys.env.get("GRAFT_SIM_DIM").flatMap(_.toIntOption).getOrElse(128)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val t0 = System.nanoTime()
     val tels = SimilarityStress.run(spark, nVecs, dim, println)

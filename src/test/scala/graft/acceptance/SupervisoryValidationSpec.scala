@@ -164,6 +164,18 @@ abstract class SupervisoryValidationSpec(regime: String) extends SparkSpec {
 
   // ---- the ratchet ---------------------------------------------------------
 
+  test("every register entry's regime is one the concrete classes cover") {
+    // each class slices the register to its own regime, so an entry with
+    // any other regime (a misspelling) would drop out of both classes
+    val regimes =
+      arr(register("known_broken_rules")).map(str(_, "regime")) ++
+      arr(register("known_uncovered_templates")).map(str(_, "regime")) ++
+      register("summary").asInstanceOf[JObj].keys.map(_.takeWhile(_ != '/'))
+    val uncovered = regimes.toSet -- SupervisoryValidationSpec.regimes
+    assert(regimes.nonEmpty && uncovered.isEmpty,
+      s"register regimes no concrete class covers: ${uncovered.toSeq.sorted.mkString(", ")}")
+  }
+
   test("no supervisory validation break outside the baseline") {
     val (broken, _, summary) = gate
     summary.foreach { case (k, v) => info(s"$k: $v") }
@@ -226,6 +238,11 @@ abstract class SupervisoryValidationSpec(regime: String) extends SparkSpec {
     }
     assert(issues.isEmpty, s"summary drift:\n${issues.mkString("\n")}")
   }
+}
+
+object SupervisoryValidationSpec {
+  /** The regimes of the concrete classes below. */
+  val regimes: Set[String] = Set("crr", "b31")
 }
 
 /** CRR half of the supervisory-validation ratchet (six runs). */

@@ -218,6 +218,60 @@ class PlanDisciplineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       s"q174 must not shuffle raw span text:\n$plan")
   }
 
+  test("reporting sheets sort in one partition and shuffle no driver-local axis") {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.LocalTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    for (q <- Pillar3.all :+ Domain.q94CorepTemplate) {
+      val df = q.build(spark, sfDir)
+      df.collect() // finalise the adaptive plan
+      val plan = df.queryExecution.executedPlan
+      val shuffles = collect(plan) { case e: ShuffleExchangeExec => e }
+      assert(!shuffles.exists(_.outputPartitioning.isInstanceOf[RangePartitioning]),
+        s"${q.name} range-partitions its few output rows:\n$plan")
+      assert(!shuffles.exists(e =>
+          collectLeaves(e.child).forall(_.isInstanceOf[LocalTableScanExec])),
+        s"${q.name} shuffles a driver-local table:\n$plan")
+    }
+  }
+
+  test("q132 reuses q130's CCR components; releasing the session drops them") {
+    import org.apache.spark.ListenerBusBridge
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import graft.reporting.TemplateBundle
+    import scala.jdk.CollectionConverters._
+    val s = spark.newSession()
+    val scanned = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    s.listenerManager.register(new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        collect(qe.executedPlan) { case scan: FileSourceScanExec =>
+          scan.relation.location.rootPaths.map(_.getName) }
+          .flatten.foreach(scanned.add)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    })
+    // the CCR components read lineitem (q56, q97) and supplier (q105)
+    val ccrTables = Set("lineitem.parquet", "supplier.parquet")
+    def ccrScansOf(q: QueryDef): Set[String] = {
+      ListenerBusBridge.drain(spark.sparkContext)
+      scanned.clear()
+      q.build(s, sfDir).collect()
+      ListenerBusBridge.drain(spark.sparkContext)
+      scanned.asScala.toSet.intersect(ccrTables)
+    }
+    try {
+      assert(ccrScansOf(Pillar3.q130Ov1Overview) == ccrTables)
+      assert(ccrScansOf(Pillar3.q132Cms1).isEmpty,
+        "q132 rebuilt the CCR components q130 built in its session")
+      TemplateBundle.releaseSession(s)
+      assert(ccrScansOf(Pillar3.q132Cms1) == ccrTables,
+        "releaseSession kept the CCR components")
+    } finally {
+      TemplateBundle.releaseSession(s)
+      graft.engine.DomainPipeline.releaseLedger(s, sfDir)
+    }
+  }
+
   test("no query's optimized plan exceeds the node ceiling") {
     // Higher ceilings for the deliberately-large plans: everything built
     // on the composed 9-stage domain ledger subtree (q90/q85/q86/q94 —
