@@ -194,8 +194,13 @@ final class CreditRiskCalc(spark: SparkSession, config: CalcConfig) {
     XlsxWriter.write(df, path, sheet)
 
   /** COREP-style template export: evaluate the cell specs over the ledger
-    * in one pass and write the long-format sheet (reference
-    * `api/export.py:262` `export_to_corep`). */
+    * and write the long-format sheet (reference `api/export.py:262`
+    * `export_to_corep`). Cells that share a measure are summed per group
+    * of the columns their predicates read ([[TemplateGenerator.wideRow]]),
+    * so the predicates should read low-cardinality columns: one over a
+    * near-unique column (an amount threshold) makes that grouping about
+    * as large as the ledger. Predicates must be deterministic: Spark
+    * rejects a nondeterministic one inside the cell's aggregate. */
   def exportToCorep(
       ledger: DataFrame, cells: Seq[CellSpec], path: String): Unit =
     XlsxWriter.write(

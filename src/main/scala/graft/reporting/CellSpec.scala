@@ -15,7 +15,12 @@ import org.apache.spark.sql.types.DecimalType
   * sums every distinct (measure, scale) once, and each cell then sums its
   * predicate's groups. A C 07 sheet is a few dozen groups and one
   * single-row aggregate regardless of ledger size, and the per-row work is
-  * one decimal sum per measure, not one per cell. Money cells accumulate in
+  * one decimal sum per measure, not one per cell. So predicates should
+  * read low-cardinality columns: the groups number the distinct values of
+  * the columns they read. Cells whose predicates read no column or share
+  * no measure are one aggregation over the ledger,
+  * `sum(when(predicate, measure))` per cell. Predicates must be
+  * deterministic. Money cells accumulate in
   * DECIMAL(38, scale), so the template value is independent of
   * partition/addition order (the [[graft.queries.Q.dsum]] discipline).
   * Lineage (reference `reporting/lineage.py`: cell drill-down re-runs the
@@ -29,38 +34,48 @@ object TemplateGenerator {
   /** All cells → ONE wide row (cellId columns): each cell is
     * `sum(when(predicate, measure))` accumulated in DECIMAL(38, scale).
     *
-    * Two levels: the ledger is grouped by the columns the predicates read,
-    * and each group sums each distinct (measure, scale) once; every cell
-    * then sums the group totals its predicate selects. This equals the
-    * one-level sum exactly: decimal addition is associative, and a
-    * deterministic predicate is constant within a group (grouping merges
-    * -0.0 with 0.0 and all NaNs, which SQL comparisons do not tell apart).
-    * Null keys, null measures and an empty ledger give the same nulls and
-    * zeros. Predicates that read no column group by a constant instead:
-    * an empty ledger then has no group, not one, and its cells stay null.
-    * The `otherwise` branch is a decimal zero: a double one would widen the
-    * sum to double. Measures pass through double, as the one-level form's
-    * double `otherwise(0.0)` branch typed them.
+    * Two levels where they save per-row work: the ledger is grouped by the
+    * columns the predicates read, and each group sums each distinct
+    * (measure, scale) once; every cell then sums the group totals its
+    * predicate selects. This equals the one-level sum exactly: decimal
+    * addition is associative, and a deterministic predicate is constant
+    * within a group (grouping merges -0.0 with 0.0 and all NaNs, which SQL
+    * comparisons do not tell apart). Null keys, null measures and an empty
+    * ledger give the same nulls and zeros. The first level is one row per
+    * distinct key, so its cost grows with the cardinality of the predicate
+    * columns: predicates should read low-cardinality columns (class,
+    * weight, approach), not near-unique ones such as an amount.
+    *
+    * One level — a single aggregation over the ledger — where grouping
+    * saves nothing: predicates that read no column (a constant key), or
+    * cells that share no measure. Predicates must be deterministic in
+    * both forms: Spark rejects a nondeterministic expression inside an
+    * aggregate function.
+    *
+    * The `otherwise` branch of the second level is a decimal zero: a double
+    * one would widen the sum to double. Measures pass through double, as
+    * the one-level form's double `otherwise(0.0)` branch typed them.
     */
   def wideRow(ledger: DataFrame, cells: Seq[CellSpec]): DataFrame = {
     require(cells.nonEmpty)
     val preds = ledger.select(cells.map(_.predicate): _*).queryExecution.analyzed
-    require(preds.expressions.forall(_.deterministic),
-      "cell predicates must be deterministic")
-    val keys = preds.expressions.flatMap(_.references).distinct
-      .map(GraftBridge.column) match {
-        case Seq() => Seq(lit(true)) // not an integer: that would be an ordinal
-        case ks => ks
-      }
+    val keys = preds.expressions.flatMap(_.references).distinct.map(GraftBridge.column)
     val measures = cells.map(c => (c.measure, c.scale)).distinct
-    val sums = measures.zipWithIndex.map { case ((m, scale), i) =>
-      sum(m.cast("double").cast(DecimalType(38, scale))).as(s"__m$i") }
-    val grouped = ledger.groupBy(keys: _*).agg(sums.head, sums.tail: _*)
-    val aggs = cells.map(c =>
-      sum(when(c.predicate, col(s"__m${measures.indexOf((c.measure, c.scale))}"))
-        .otherwise(lit(0).cast(DecimalType(38, c.scale))))
-        .cast("double").as(c.cellId))
-    grouped.agg(aggs.head, aggs.tail: _*)
+    if (keys.isEmpty || measures.size == cells.size) {
+      val aggs = cells.map(c =>
+        sum(when(c.predicate, c.measure).otherwise(lit(0.0))
+          .cast(DecimalType(38, c.scale))).cast("double").as(c.cellId))
+      ledger.agg(aggs.head, aggs.tail: _*)
+    } else {
+      val sums = measures.zipWithIndex.map { case ((m, scale), i) =>
+        sum(m.cast("double").cast(DecimalType(38, scale))).as(s"__m$i") }
+      val grouped = ledger.groupBy(keys: _*).agg(sums.head, sums.tail: _*)
+      val aggs = cells.map(c =>
+        sum(when(c.predicate, col(s"__m${measures.indexOf((c.measure, c.scale))}"))
+          .otherwise(lit(0).cast(DecimalType(38, c.scale))))
+          .cast("double").as(c.cellId))
+      grouped.agg(aggs.head, aggs.tail: _*)
+    }
   }
 
   /** Unpivot a [[wideRow]] to the long (cell_id, value) template. */

@@ -19,7 +19,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * sheet build. A template's own QueryDef keeps building its sheet
   * fresh, so the driver's per-query benches measure real production cost;
   * the one exception is the CCR components OV1 and CMS1 share
-  * (`Pillar3.ccrComponents`), which both sheets read from here.
+  * (`Pillar3.ccrComponents`), which both sheets read from here. A harness
+  * that runs those sheets repeatedly in one session without
+  * [[releaseSession]] times them without the components after the first
+  * build: `graft.Bench`'s timed rounds of q130 and q132 follow a warmup
+  * in the same session, so they leave out q56, q105, q96 and q97.
   */
 object TemplateBundle {
 

@@ -48,8 +48,8 @@ class TemplateGeneratorSpec extends SparkSpec {
     assertExact(ledger, cells)
   }
 
-  test("wideRow equals the one-level sums on null keys and measures, " +
-      "never-true and two-column predicates, and no rows") {
+  /** A hand-built frame with null keys and measures and a -0.0 key. */
+  private def handBuilt: DataFrame = {
     val schema = StructType(Seq(
       StructField("cls", StringType), StructField("rw", DoubleType),
       StructField("m", DoubleType), StructField("n", LongType)))
@@ -59,7 +59,12 @@ class TemplateGeneratorSpec extends SparkSpec {
       Row("b", 0.0, 4.25, 2L), Row(null, 0.5, 100.0, 4L),
       Row(null, null, 0.125, 5L), Row("c", 1.0, null, null),
       Row("b", null, -3.335, 6L))
-    val frame = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
+
+  test("wideRow equals the one-level sums on null keys and measures, " +
+      "never-true and two-column predicates, and no rows") {
+    val frame = handBuilt
     val cells = Seq(
       CellSpec("a_m", col("cls") === "a", col("m")),
       CellSpec("a_m4", col("cls") === "a", col("m"), 4),
@@ -80,6 +85,30 @@ class TemplateGeneratorSpec extends SparkSpec {
       CellSpec("none", lit(false), col("m")))
     assertExact(frame, constant)
     assertExact(frame.filter(col("n") > 100L), constant)
+  }
+
+  test("wideRow groups only where a shared measure saves per-row sums") {
+    val frame = handBuilt
+    def aggregates(df: DataFrame, cells: Seq[CellSpec]): Int =
+      TemplateGenerator.wideRow(df, cells).queryExecution.optimizedPlan
+        .collect { case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a }
+        .size
+    assert(aggregates(frame, Seq(CellSpec("a", col("cls") === "a", col("m")),
+      CellSpec("b", col("cls") === "b", col("m")))) == 2)
+    // a constant key saves nothing: q121's C 08 cells all read no column
+    assert(aggregates(frame, Seq(CellSpec("all", lit(true), col("m")),
+      CellSpec("none", lit(false), col("m")))) == 1)
+    val c08 = graft.queries.Corep08.c08Prepare(DomainPipeline.ledger(spark, sfDir))
+    assert(aggregates(c08, graft.queries.Corep08.c08Cells) == 1)
+    // no shared measure: grouping would only add a level
+    assert(aggregates(frame, Seq(CellSpec("a", col("cls") === "a", col("m")),
+      CellSpec("b", col("cls") === "b", col("n")))) == 1)
+    // a nondeterministic predicate fails analysis in both forms
+    val nondet = Seq(CellSpec("r", rand(7) < 2.0 && col("cls") === "a", col("m")),
+      CellSpec("b", col("cls") === "b", col("m")))
+    intercept[org.apache.spark.sql.AnalysisException](oneLevel(frame, nondet))
+    intercept[org.apache.spark.sql.AnalysisException](
+      TemplateGenerator.wideRow(frame, nondet))
   }
 
   test("q161's grouped band sums equal the ungrouped ones") {
