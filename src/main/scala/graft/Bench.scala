@@ -10,13 +10,16 @@ package graft
   * Reproducibility hardening (round-2 judge instruction): ~50 queries × 3
   * executions share one JVM, so cumulative state (cached relations,
   * broadcast blocks, old-gen garbage) can inflate late queries far beyond
-  * their fresh-JVM cost. Between queries the cache is cleared and a GC is
-  * requested; the JSON reports per-round times (`rounds`) so external CPU
+  * their fresh-JVM cost. Between queries the finished query's persisted
+  * frames are released (`SessionScope.endQuery`; the session's memos, the
+  * ledger among them, stay) and a GC is requested; the JSON reports per-round times (`rounds`) so external CPU
   * contention shows up as round-over-round variance, and failed executions
   * are counted and surfaced (`failures`/`n_failures`) instead of silently
   * benching as ~0s.
   */
 object Bench {
+  import scala.jdk.CollectionConverters._
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val rounds = sys.env.getOrElse("SPARK_GRAFT_ROUNDS", "2").toInt
@@ -56,6 +59,10 @@ object Bench {
       case _ => None
     }
     // one timed execution: (wall sec, GC delta ms, process-CPU/wall ratio)
+    // The CCR components q130 and q132 share are a session memo: drop it
+    // before each of their timed rounds, so those rounds time q56, q105,
+    // q96 and q97 as part of the sheet, as a fresh run does.
+    val readsCcrComponents = Set("q130_ov1_overview", "q132_cms1")
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .map { case (name, fn) =>
@@ -80,16 +87,17 @@ object Bench {
       // the InMemoryRelation is cheap when warm and repopulates any blocks
       // the executor dropped under memory pressure, so the rounds measure
       // the query rather than a silent cold ledger rebuild (BENCH_r09:
-      // q94 recorded 13.03 s vs 1.6-1.9 s judge-measured warm). Skipped
-      // when the handle is stale (storageLevel NONE after a cache sweep) —
-      // counting a stale frame would re-execute the chain uncached.
+      // q94 recorded 13.03 s vs 1.6-1.9 s judge-measured warm).
       for (irb <- Seq(true, false);
-           h <- engine.DomainPipeline.persistedHandle(spark, sfDir, irb)
-           if h.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+           h <- engine.DomainPipeline.persistedHandle(spark, sfDir, irb))
         h.count()
-      val timed = (1 to rounds).map(_ => once())
+      val timed = (1 to rounds).map { _ =>
+        if (readsCcrComponents(name)) SessionScope.drop(spark, sfDir,
+          reporting.TemplateBundle.key(queries.Pillar3.CcrComponents))
+        once()
+      }
       // isolate the next query from this one's accumulated state
-      spark.catalog.clearCache()
+      SessionScope.endQuery(spark)
       System.gc()
       name -> timed
     }
@@ -134,18 +142,19 @@ object Bench {
     // was 1 s through r17, which let sub-second queries inflate past 2×
     // their prior without an adjudication trail. `priorRecordCs` is the
     // RUNNING MIN of every parseable prior round's official per-query
-    // record — GENERATED MECHANICALLY by tools/gen_bench_priors.py into
-    // the bench_priors.json classpath resource (r18 verdict item 1: the
-    // hand-maintained literal went stale, 79/157 entries above the true
-    // min, and 13 contended rows cleared loosened thresholds
-    // unadjudicated) — EXCEPT a query whose SEMANTICS changed, whose
-    // entry is RESET to its post-change records only (the documented
-    // list in BenchPriors.documentedResets; min'ing against the retired
-    // lighter query would fork it every round forever). A query with no
-    // prior gets prior = 0, i.e. the plain 0.5 s floor. BenchPriorsSpec
-    // fails the suite if the shipped resource is looser than the
-    // artifacts it derives from.
+    // record — DERIVED at start from the committed BENCH_r*.json
+    // artifacts in the working directory (BenchPriors.load; r18 verdict
+    // item 1: the hand-maintained literal went stale, 79/157 entries
+    // above the true min, and 13 contended rows cleared loosened
+    // thresholds unadjudicated) — EXCEPT a query whose SEMANTICS changed,
+    // whose entry is RESET to its post-change records only (the
+    // documented list in BenchPriors.documentedResets; min'ing against
+    // the retired lighter query would fork it every round forever). A
+    // query with no prior gets prior = 0, i.e. the plain 0.5 s floor.
     val priorRecordCs: Map[String, Int] = BenchPriors.load()
+    if (priorRecordCs.isEmpty) System.err.println(
+      "[bench] no BENCH_r*.json in the working directory: every fork " +
+        "threshold is the 0.5 s floor")
     def forkThresholdSec(name: String): Double =
       math.max(0.5, 2.0 * priorRecordCs.getOrElse(qnum(name), 0) / 100.0)
     // SPARK_GRAFT_FORCE_FORK: comma-separated names to adjudicate
@@ -197,8 +206,9 @@ object Bench {
     // is ~30-45 min under host contention, on top of the battery itself.
     // The phase now stops LAUNCHING forks once it has consumed
     // SPARK_GRAFT_ISO_BUDGET_SEC of wall (default 420 s; retries count
-    // against the same budget). Rows whose fork never launched keep
-    // their batch min and are counted in `iso_skipped` on the total
+    // against the same budget), and a fork still running when the budget
+    // runs out is killed. Rows whose fork never launched or was killed
+    // keep their batch min and are counted in `iso_skipped` on the total
     // line, so a budget-exhausted record self-describes instead of the
     // whole artifact dying to the driver's timeout. Methodology per
     // fork is unchanged (same warmup + rounds, min estimator).
@@ -210,7 +220,6 @@ object Bench {
     val isolated: Map[String, IsoRun] =
       if (isolatedMode || slowest.isEmpty || failures.nonEmpty) Map.empty
       else {
-        import scala.jdk.CollectionConverters._
         val javaBin = System.getProperty("java.home") + "/bin/java"
         val jvmArgs = java.lang.management.ManagementFactory
           .getRuntimeMXBean.getInputArguments.asScala.toSeq
@@ -223,33 +232,39 @@ object Bench {
             pb.environment().put("SPARK_GRAFT_ISOLATED", "1")
             pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
             pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-            val p = pb.start()
-            val out = scala.io.Source.fromInputStream(p.getInputStream)
-              .getLines().toList // drains stdout, so waitFor cannot deadlock
-            p.waitFor()
-            val line = out.find(_.startsWith("""{"metric":"total""""))
-              .getOrElse(sys.error(s"no total line from the isolated JVM for $name"))
-            val body = """"queries":\{([^}]*)\}""".r.findFirstMatchIn(line)
-              .map(_.group(1)).getOrElse("")
-            val sec = body.split(",").filter(_.contains(":")).collectFirst {
-              case kv if kv.split(":")(0).replace("\"", "") == qnum(name) =>
-                kv.split(":")(1).toDouble / 100.0
+            awaitBounded(pb.start(), isoLeftSec) match {
+              case None =>
+                System.err.println(s"[bench] isolated re-run of $name " +
+                  "killed: the adjudication budget ran out")
+                isoSkipped += 1
+                None
+              case Some(out) => parseFork(name, out)
             }
-            val tele = out.find(_.startsWith("""{"metric":"iso_detail"""")).toSeq
-              .flatMap { d =>
-                """"tele":\[(.*)\]\}""".r.findFirstMatchIn(d).toSeq.flatMap {
-                  m => m.group(1).split("""\],\[""").toSeq.map { pair =>
-                    val Array(g, c) = pair.replaceAll("[\\[\\]]", "").split(",")
-                    (g.toLong, c.toLong)
-                  }
-                }
-              }
-            sec.map(IsoRun(_, tele))
           } catch {
             case e: Throwable =>
               System.err.println(s"[bench] isolated re-run of $name failed: $e")
               None
           }
+        def parseFork(name: String, out: List[String]): Option[IsoRun] = {
+          val line = out.find(_.startsWith("""{"metric":"total""""))
+            .getOrElse(sys.error(s"no total line from the isolated JVM for $name"))
+          val body = """"queries":\{([^}]*)\}""".r.findFirstMatchIn(line)
+            .map(_.group(1)).getOrElse("")
+          val sec = body.split(",").filter(_.contains(":")).collectFirst {
+            case kv if kv.split(":")(0).replace("\"", "") == qnum(name) =>
+              kv.split(":")(1).toDouble / 100.0
+          }
+          val tele = out.find(_.startsWith("""{"metric":"iso_detail"""")).toSeq
+            .flatMap { d =>
+              """"tele":\[(.*)\]\}""".r.findFirstMatchIn(d).toSeq.flatMap {
+                m => m.group(1).split("""\],\[""").toSeq.map { pair =>
+                  val Array(g, c) = pair.replaceAll("[\\[\\]]", "").split(",")
+                  (g.toLong, c.toLong)
+                }
+              }
+            }
+          sec.map(IsoRun(_, tele))
+        }
         // one JVM PER query: the measured failure mode contaminated even a
         // 5-query batch (q160: 5.94 s among 5, 1.87 s alone), so sharing
         // one adjudication JVM across the set would re-admit it
@@ -370,5 +385,25 @@ object Bench {
       prior > 0 && adj(k, v) > 2.0 * prior / 100.0
     }
     println(s"""{"metric":"total","value":${f3(total)},"value_mean":${f3(totalMean)},"mean_over_min":${f"$meanOverMin%.2f"},"contended":${meanOverMin > 1.8},"n_rows_over_2x_prior":$rowsOver2x,"iso_skipped":$isoSkipped,"unit":"sec","q_unit":"centisec","load":${jstr(loadavg)},"queries":$qs,"n_failures":${failures.size},"failures":$fj,"sf":$sfNum}""")
+  }
+
+  /** Waits up to `timeoutSec` for `p` and returns its stdout lines, or
+    * kills it and returns None. Stdout drains on its own thread, so a
+    * child blocked on a full pipe cannot stall the wait. */
+  private[graft] def awaitBounded(p: Process, timeoutSec: Double): Option[List[String]] = {
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val drain = new Thread(() =>
+      try scala.io.Source.fromInputStream(p.getInputStream).getLines().foreach(lines.add)
+      catch { case _: java.io.IOException => }) // the stream closes on a kill
+    drain.setDaemon(true)
+    drain.start()
+    val ms = math.max(0L, (timeoutSec * 1000).toLong)
+    if (p.waitFor(ms, java.util.concurrent.TimeUnit.MILLISECONDS)) {
+      drain.join()
+      Some(lines.asScala.toList)
+    } else {
+      p.destroyForcibly().waitFor()
+      None
+    }
   }
 }

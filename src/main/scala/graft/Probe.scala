@@ -110,7 +110,7 @@ object Probe {
         t
       }
       println(f"[probe] $name min: ${times.min}%.2f s over $nRounds rounds")
-      spark.catalog.clearCache()
+      SessionScope.endQuery(spark)
     }
     spark.stop()
   }

@@ -33,29 +33,17 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // Family-scoped session hygiene (round-15, verdict #1): the r14 gate
-    // produced an empty artifact — the driver's correctness phase ran ~98
-    // minutes under load and died. Two wall-time levers applied here:
-    //   (a) the cache sweep moved from per-QUERY to per-FAMILY: the
-    //       memoised domain ledger / sealed stage edges were being evicted
-    //       and rebuilt by nearly every reporting query (dozens of full
-    //       re-builds per SF). A family's queries now share the warm
-    //       ledger; the sweep at the family edge still bounds pinned
-    //       frames (Similarity.scorable, q173's assigned, stage edges) to
-    //       one family's worth, so disk spill stays bounded.
-    //   (b) the per-query coalesce(1) is gone: it collapsed every query's
-    //       FINAL stage to one thread just to write one file. The driver's
-    //       compare reads the parquet directory (pyarrow dataset) and
-    //       sorts rows before hashing, so a multi-file result is
-    //       equivalent; AQE keeps small results to a few files anyway.
-    // The ledger-consuming families (domain → pillar3 → corep08 → corep09
-    // → catalogue) run as ONE no-sweep span: each of them re-derives the
-    // memoised domain ledger (both regimes), so a sweep between them
-    // re-pays two full ledger builds per family for no hygiene gain —
-    // their per-query persists are the ledger edges themselves.
-    val noSweepInto = Set("pillar3", "corep08", "corep09", "catalogue")
+    // Family-scoped session hygiene (round-15, verdict #1): a family's
+    // queries share one session, and the frames they persist are released
+    // at the family edge (SessionScope.endQuery), so pinned frames stay
+    // bounded by one family's worth while a family's queries share them
+    // (Similarity.scorable, q173's assigned). The session's memos — the
+    // ledger of both regimes among them — live the whole run, so no
+    // family rebuilds them. Each query's final stage writes as many files
+    // as it has partitions: the oracle compare (tools/selfcheck.py) reads
+    // the parquet directory and sorts rows before hashing.
     val families = SparkEntry.queryFamilies
-    families.zipWithIndex.foreach { case ((family, qs), i) =>
+    families.foreach { case (family, qs) =>
       val picked = qs.filter(d => only.forall(_.contains(d.name)))
       if (picked.nonEmpty) {
         val f0 = System.nanoTime()
@@ -66,8 +54,7 @@ object Verify {
             System.err.println(s"[verify] ${d.name} failed: ${e.getMessage}")
           }
         }
-        val next = families.drop(i + 1).map(_._1).headOption
-        if (!next.exists(noSweepInto)) spark.catalog.clearCache()
+        SessionScope.endQuery(spark)
         System.err.println(
           f"[verify] family $family: ${picked.size} queries, ${(System.nanoTime() - f0) / 1e9}%.1f s")
       }

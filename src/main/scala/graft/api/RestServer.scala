@@ -19,10 +19,14 @@ import scala.jdk.CollectionConverters._
   *
   * Not a production server (single JVM, no auth) — it is the reference's
   * `rest.py` surface re-expressed, spec-driven by `RestServerSpec`.
-  * Memory posture: the run store is an LRU capped at `maxRuns`, and
-  * eviction RELEASES the evicted run's memoised ledger edge (unless a
-  * surviving run shares it), so a long-lived server's Spark cache stays
-  * bounded by the live run set.
+  * Memory posture: everything a request leaves in the server's one
+  * session belongs to [[graft.SessionScope]]. A request's persisted query
+  * frames are released when it ends. The memos (scan frames, ledger,
+  * templates) outlive requests: the run store is an LRU capped at
+  * `maxRuns`, and an evicted run — like a `/validate`, which never enters
+  * the store — drops the memos no stored run reads (its regime's ledger,
+  * and its data dir's entries when no stored run reads that dir), so the
+  * Spark cache and the memo table stay bounded by the live run set.
   *
   * `dataRoot`, when set, is the allowlisted data base directory: a
   * request `dataPath` must resolve (after normalisation) underneath it,
@@ -47,7 +51,9 @@ final class RestServer(
       override def removeEldestEntry(
           e: java.util.Map.Entry[String, CalculationResult]): Boolean = {
         val evict = size() > maxRuns
-        if (evict) releaseRunCaches(e.getValue, this)
+        // called under the store lock, on the mutating thread
+        if (evict) releaseUnread(e.getValue.config,
+          this.values.asScala.filter(_ ne e.getValue))
         evict
       }
     })
@@ -69,21 +75,17 @@ final class RestServer(
     * the index past the process would dangle. */
   private val runIndex = new RunIndex()
 
-  /** Unpersist the evicted run's memoised ledger edge unless another
-    * LIVE run resolves to the same (dataPath, regime) memo key — runs
-    * share ledger frames by construction, so releasing a shared edge
-    * would cold-start a surviving run's next query. Called while the
-    * store lock is held, on the mutating thread. */
-  private def releaseRunCaches(
-      evicted: CalculationResult,
-      store: java.util.LinkedHashMap[String, CalculationResult]): Unit = {
-    val irb = evicted.config.permissionMode == "irb"
-    val shared = store.values.asScala.exists { r =>
-      (r ne evicted) && r.config.dataPath == evicted.config.dataPath &&
-        (r.config.permissionMode == "irb") == irb
-    }
-    if (!shared)
-      graft.engine.DomainPipeline.releaseLedger(spark, evicted.config.dataPath, irb)
+  /** Drop the memos of `cfg` that none of `stored` reads: the ledger of
+    * its (dataPath, regime), and every memo of the data dir when no
+    * stored run reads that dir. Runs share memos by construction, so
+    * dropping a shared entry would cold-start a surviving run's next
+    * query. */
+  private def releaseUnread(cfg: CalcConfig, stored: Iterable[CalculationResult]): Unit = {
+    val irb = cfg.permissionMode == "irb"
+    val sameDir = stored.filter(_.config.dataPath == cfg.dataPath)
+    if (!sameDir.exists(r => (r.config.permissionMode == "irb") == irb))
+      graft.engine.DomainPipeline.releaseLedger(spark, cfg.dataPath, irb)
+    if (sameDir.isEmpty) graft.SessionScope.drop(spark, cfg.dataPath)
   }
 
   /** Allowlist gate: with a `dataRoot` configured, the requested path
@@ -253,7 +255,8 @@ final class RestServer(
   private def handle(path: String)(fn: HttpExchange => Unit): Unit =
     server.createContext(path, (ex: HttpExchange) =>
       try fn(ex)
-      catch { case e: Throwable => error(ex, 500, Option(e.getMessage).getOrElse("internal error")) })
+      catch { case e: Throwable => error(ex, 500, Option(e.getMessage).getOrElse("internal error")) }
+      finally graft.SessionScope.endQuery(spark))
 
   handle("/api/frameworks") { ex =>
     respond(ex, 200, jval(Seq(
@@ -273,19 +276,11 @@ final class RestServer(
           val cfg = CalcConfig(dataPath = path)
           val res = new CreditRiskCalc(spark, cfg).calculate()
           // /validate results never enter the run store, so they carry
-          // no eviction accounting: release the ledger this validation
-          // materialised unless a STORED run shares the (path, regime)
-          // key — otherwise repeated validates on distinct paths grow
-          // the Spark cache without bound.
-          val irb = cfg.permissionMode == "irb"
-          val shared = runs.synchronized {
-            runs.values.asScala.exists { r =>
-              r.config.dataPath == path &&
-                (r.config.permissionMode == "irb") == irb
-            }
-          }
-          if (!shared)
-            graft.engine.DomainPipeline.releaseLedger(spark, path, irb)
+          // no eviction accounting: release the memos this validation
+          // made unless a STORED run reads them — otherwise repeated
+          // validates on distinct paths grow the Spark cache and the memo
+          // table without bound.
+          runs.synchronized(releaseUnread(cfg, runs.values.asScala.toList))
           respond(ex, 200, jobj(Map(
             "valid" -> res.errors.isEmpty,
             "errors" -> res.errors.map(e => Map[String, Any](

@@ -31,7 +31,8 @@ import graft.queries.Q._
   *
   * One persist rule holds for both modes: whoever composes the pipeline
   * persists a frame read more than once, holds it and releases it — the
-  * ledger memo its ledger ([[releaseLedger]]), the stage fold its edges
+  * ledger memo its ledger (an entry of [[graft.SessionScope]], released
+  * with its key or its session), the stage fold its edges
   * ([[PipelineContext.release]]). No stage function persists anything
   * itself, and the composed ledger plan reads each of its frames once
   * (the CRM waterfall takes its input through one exchange), so nothing
@@ -685,22 +686,22 @@ object DomainPipeline {
 
   // ---- composition -----------------------------------------------------
 
-  /** Session-scoped memo of the sealed ledger edge, keyed by
-    * (session, data dir, permission regime). The reference materialises
-    * each stage edge at most once per run (`engine/materialise.py:220-243`,
-    * one-materialisation-per-edge); without the memo every ledger consumer
-    * (q85/q86/q90/q93/q94/q100/q102/q106) re-built an identical plan whose
-    * persist entries did not unify, re-paying the full CRM fill per query
-    * (~1.4 s × 8 at sf0.1). Returning the SAME DataFrame object guarantees
-    * cache-hit by identity rather than relying on canonical-plan matching. */
-  private val ledgerMemo =
-    scala.collection.concurrent.TrieMap[(SparkSession, String, Boolean), Memo]()
+  /** The memo key of the sealed ledger edge, per (session, data dir,
+    * permission regime) in [[graft.SessionScope]]. The reference
+    * materialises each stage edge at most once per run
+    * (`engine/materialise.py:220-243`); without the memo every ledger
+    * consumer (q85/q86/q90/q93/q94/q100/q102/q106) re-built an identical
+    * plan whose persist entries did not unify, re-paying the full CRM fill
+    * per query (~1.4 s × 8 at sf0.1). Returning the SAME DataFrame object
+    * guarantees cache-hit by identity rather than relying on
+    * canonical-plan matching. */
+  private def ledgerKey(irbMode: Boolean) = ("ledger", irbMode)
 
   /** One memoised ledger: the PERSISTED build handle (its storageLevel is
-    * the liveness check, and releaseLedger unpersists it), the re-rooted
+    * the liveness check, and release unpersists it), the re-rooted
     * leaf consumers receive, and the summaries computed over that leaf,
     * keyed by regime (`b31`). The summaries live and die with the entry. */
-  private final class Memo(val persisted: DataFrame) {
+  private final class Memo(val persisted: DataFrame) extends graft.SessionScope.Owned {
     // RE-ROOT before handing out: consumers receive a LogicalRDD leaf
     // over the persisted plan's compiled RDD, not the ~300-node ledger
     // subtree itself. Persisting dedups EXECUTION but not PLAN size —
@@ -712,21 +713,26 @@ object DomainPipeline {
     // blocks as internal rows, with no Row round-trip. Compiling its RDD
     // is NOT lazy: adaptive execution runs every stage of the build here,
     // the cache fill included (the first call to `ledger` pays them).
-    // Lazy, so that work runs outside buildLock.
+    // Lazy, so that work runs outside the memo's build.
     lazy val rooted: DataFrame = GraftBridge.reroot(persisted)
 
-    // guarded by buildLock
+    // guarded by itself
     private val summaries = scala.collection.mutable.Map.empty[Boolean, DataFrame]
     private var released = false
 
-    /** The memoised summary; a released entry (a concurrent release won
-      * the race) hands out an unmemoised one rather than leak a persist. */
-    def summary(b31: Boolean): DataFrame =
+    def live: Boolean =
+      persisted.storageLevel != org.apache.spark.storage.StorageLevel.NONE
+
+    /** The memoised summary (plan construction only: the persist is lazy);
+      * a released entry (a concurrent release won the race) hands out an
+      * unmemoised one rather than leak a persist. */
+    def summary(b31: Boolean): DataFrame = summaries.synchronized {
       if (released) summarise(rooted, b31)
       else summaries.getOrElseUpdate(b31,
         summarise(rooted, b31).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    }
 
-    def release(): Unit = {
+    def release(): Unit = summaries.synchronized {
       released = true
       (persisted +: summaries.values.toSeq).foreach(_.unpersist(false))
     }
@@ -735,10 +741,9 @@ object DomainPipeline {
   /** The full per-exposure audit ledger (wide frame), one lazy plan,
     * memoised + persisted per (session, dir, regime).
     * `irbMode = false` runs the reference's "standardised" permission
-    * mode (all exposures route SA). If an external cache sweep (e.g. the
-    * bench's between-query `clearCache`) evicted the data, the memo
-    * entry is DROPPED and a fresh plan is built and persisted — never
-    * re-persist a stale, already-executed frame: its frozen
+    * mode (all exposures route SA). If a cache sweep evicted the data,
+    * the memo entry is DROPPED and a fresh plan is built and persisted —
+    * never re-persist a stale, already-executed frame: its frozen
     * QueryExecution still references the evicted InMemoryRelation, and
     * downstream consumers then re-execute the whole unpersisted chain
     * per join branch (measured: q86 6.5 s → 12 s round-over-round). */
@@ -746,31 +751,15 @@ object DomainPipeline {
     memo(s, dir, irbMode).rooted
 
   /** The live memo entry for the key, built if absent or evicted; a stale
-    * entry is released (its summaries with it). */
-  private def memo(s: SparkSession, dir: String, irbMode: Boolean): Memo = {
-    val key = (s, dir, irbMode)
-    // Check-then-act must be atomic: the REST server executes requests
-    // on a thread pool, so two concurrent consumers of the same key would
-    // otherwise both build, and the loser's persisted frames would leak.
-    // Building the entry is plan construction only (persist() is lazy,
-    // and the re-root runs later, outside the lock), so serialising it is
-    // cheap — the lock is never held across an executor round-trip.
-    buildLock.synchronized {
-      ledgerMemo.get(key)
-        .filter(_.persisted.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
-        .getOrElse {
-          ledgerMemo.get(key).foreach(_.release())
-          val entry = new Memo(buildLedger(s, dir, irbMode)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-          ledgerMemo.put(key, entry)
-          entry
-        }
-    }
-  }
-
-  /** Serialises memo-entry builds: guards the memo check-then-act and
-    * each entry's summaries. */
-  private val buildLock = new Object
+    * entry is released (its summaries with it). Building the entry is plan
+    * construction only (persist() is lazy, and the re-root runs later,
+    * outside the build), so concurrent first readers wait for plan
+    * construction, never for an executor round-trip. */
+  private def memo(s: SparkSession, dir: String, irbMode: Boolean): Memo =
+    graft.SessionScope.memo(s, dir, ledgerKey(irbMode))(
+      new Memo(buildLedger(s, dir, irbMode)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)),
+      (m: Memo) => m.live)
 
   /** Test hook: the PERSISTED (un-rooted) ledger handle, if memoised —
     * the frame whose QueryExecution carries the real build plan (broadcast
@@ -779,14 +768,13 @@ object DomainPipeline {
     * plan-shape promises inspect it here. */
   private[graft] def persistedHandle(
       s: SparkSession, dir: String, irbMode: Boolean = true): Option[DataFrame] =
-    ledgerMemo.get((s, dir, irbMode)).map(_.persisted)
+    graft.SessionScope.peek[Memo](s, dir, ledgerKey(irbMode)).map(_.persisted)
 
   /** Release one memoised ledger edge: drop the memo entry and unpersist
-    * the ledger and its summaries.
-    * Long-lived callers (the REST run store) call this on eviction so the
-    * Spark cache does not grow without bound; `unpersist` on an already-evicted frame is a no-op. */
+    * the ledger and its summaries; `unpersist` on an already-evicted
+    * frame is a no-op. */
   def releaseLedger(s: SparkSession, dir: String, irbMode: Boolean = true): Unit =
-    buildLock.synchronized(ledgerMemo.remove((s, dir, irbMode)).foreach(_.release()))
+    graft.SessionScope.drop(s, dir, ledgerKey(irbMode))
 
   /** Probe hook: the un-memoised composed plan (no ledger persist, no
     * re-root). */
@@ -850,8 +838,8 @@ object DomainPipeline {
   def summary(
       s: SparkSession, dir: String, irbMode: Boolean = true, b31: Boolean = false): DataFrame = {
     val m = memo(s, dir, irbMode)
-    m.rooted // the re-root's shuffle stages run outside the lock
-    buildLock.synchronized(m.summary(b31))
+    m.rooted // the re-root's shuffle stages run outside the summaries' lock
+    m.summary(b31)
   }
 
   /** The same pipeline as Orchestrator stages with materialised edges —

@@ -157,7 +157,7 @@ object Dedup {
       df.select(col(idCol).as("mh_id"),
         graft.functions.hashfns.minhash_shingles(
           tokens(coalesce(col(textCol), lit(""))), shingleN, k).as("sig")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.SessionScope.persist)
     // band keys via the codegen fold (graft.functions.TextHash.bandHashes)
     // — the previous transform/slice/concat_ws/xxhash64 chain STRINGIFIED
     // every band of every doc in interpreted eval (8 × corpus rows); the
@@ -418,7 +418,7 @@ object Dedup {
     // labels is a Project OVER the persisted frame — unpersisting the
     // projection is a silent no-op (CacheManager matches on sameResult),
     // so the generation handle must be kept separately or every round's
-    // cache entry leaks until an external clearCache.
+    // cache entry stays until the query ends.
     //
     // LINEAGE TRUNCATION (the round-8 q75 regression fix): each round's
     // frame must be re-rooted as a fresh leaf (`GraftBridge.reroot`: a
@@ -464,7 +464,7 @@ object Dedup {
         .select(col("cc_id"),
           nextLabel.as("cc_label"),
           (nextLabel < col("cc_prev")).as("cc_moved"))
-        .persist(lvl)
+        .transform(graft.SessionScope.persist) // the last one outlives the loop
       // ONE action per round: counting the moved rows evaluates (and
       // therefore caches) every partition of `next` before the previous
       // frames are unpersisted — otherwise lazily-uncached partitions

@@ -76,7 +76,7 @@ object Hierarchy {
           .select(col("node"),
             coalesce(col("p_parent"), col("anc")).as("anc"),
             (col("p_parent").isNotNull).as("moved"))
-          .persist()
+          .transform(graft.SessionScope.persist)
         val anyMoved = stepped.filter(col("moved")).limit(1).count() > 0
         val next = stepped.drop("moved")
         if (!anyMoved) next else loop(next, round + 1)

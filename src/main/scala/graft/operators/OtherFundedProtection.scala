@@ -120,16 +120,15 @@ object OtherFundedProtection {
     // Catalyst does not CSE across join branches — persist them so the
     // collateral book is scanned once, not once per level, and AQE sees
     // the exact (beneficiary-grain) size when choosing broadcast.
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val liTotal = li.groupBy(col("beneficiary_reference")).agg(
       dsum(col("market_value"), 2).as("_li_v"),
       dsum(col("market_value") * col("_li_rw"), 4).as("_li_vrw"))
-      .persist(lvl)
+      .transform(graft.SessionScope.persist)
     val liMatched = polCcyCol.map { c =>
       li.groupBy(col("beneficiary_reference"), c.as("_li_ccy")).agg(
         dsum(col("market_value"), 2).as("_li_mv"),
         dsum(col("market_value") * col("_li_rw"), 4).as("_li_mvrw"))
-        .persist(lvl)
+        .transform(graft.SessionScope.persist)
     }
 
     val ead0 = coalesce(col("ead"), lit(0.0))

@@ -69,7 +69,7 @@ object PrefixSum {
     val intra = df.withColumn("_ps_bucket", bucket)
       .withColumn("_ps_val", value)
       .withColumn("_ps_cum", sum(col("_ps_val")).over(wIntra))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.SessionScope.persist)
     val wOff = Window.partitionBy(part: _*).orderBy(col("_ps_bucket"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val offsets = intra

@@ -159,40 +159,20 @@ object Similarity {
     * share ONE in-memory copy instead of re-paying the window per
     * consumer (measured: q71 re-ran it 3× at sf0.1, doubling the query).
     *
-    * LIFECYCLE: both harnesses — Bench.scala and Verify.scala — call
-    * `spark.catalog.clearCache()` between queries, so entries don't
-    * leak across the battery. A long-lived session (the REST server
-    * path) calling similarity operators over many DISTINCT inputs must
-    * instead call [[releaseScorables]] when a working set is done —
-    * every persisted frame is tracked here for exactly that sweep
-    * (mirrors `DomainPipeline.releaseLedger`). Within a query, LRU
+    * LIFECYCLE: the frame is a query frame of [[graft.SessionScope]]:
+    * it lives until the caller ends the query (`SessionScope.endQuery`)
+    * or releases the session, whichever comes first. Within a query, LRU
     * eviction bounds memory. */
   def scorable(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
     // has_nonzero = codegen exists(v, x => x =!= 0) (VectorParitySpec
     // pins the three-valued semantics incl. the any-null case) — the
     // lambda form evaluated interpreted per element over every vector
-    val cleaned = df.filter(col(idCol).isNotNull && col(vecCol).isNotNull &&
+    df.filter(col(idCol).isNotNull && col(vecCol).isNotNull &&
         graft.functions.vecfns.has_nonzero(col(vecCol)))
       .withColumn("_sc_rn", row_number().over(
         Window.partitionBy(col(idCol)).orderBy(col(vecCol))))
       .filter(col("_sc_rn") === 1).drop("_sc_rn")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    tracked.synchronized { tracked += cleaned }
-    cleaned
-  }
-
-  /** Frames pinned by [[scorable]] and not yet released. CacheManager
-    * canonicalisation means same-input frames share one cache entry, so
-    * duplicates in this list cost nothing beyond the unpersist call. */
-  private val tracked =
-    scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-
-  /** Unpersist every frame [[scorable]] has pinned since the last
-    * release. Blocking=false: eviction proceeds asynchronously, callers
-    * never wait on executor cleanup. */
-  def releaseScorables(): Unit = tracked.synchronized {
-    tracked.foreach(_.unpersist(false))
-    tracked.clear()
+      .transform(graft.SessionScope.persist)
   }
 
   /** Plain double dot product (internal ranking only) — codegen kernel,
@@ -311,8 +291,7 @@ object Similarity {
       .withColumn("bucket_n", count(lit(1)).over(wBucket))
       .filter(col("bucket_n") <= maxBucket)
       .drop("bucket_n")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    tracked.synchronized { tracked += capped }
+      .transform(graft.SessionScope.persist)
     // The 16-byte signatures ride the bucket join so the Hamming screen
     // runs BEFORE the pair distinct (filters deterministic per pair
     // commute with distinct — the simhash lesson from the corpus tier):
@@ -402,7 +381,7 @@ object Similarity {
     // otherwise be re-paid every pass (measured +0.8 s at sf0.1)
     val feat = scorable(df, idCol, vecCol).select(col(idCol), col(vecCol),
       array_to_vector(col(vecCol).cast("array<double>")).as("features"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.SessionScope.persist)
     val model = new KMeans().setK(nlist).setSeed(seed).setFeaturesCol("features")
       .fit(feat)
     (model.transform(feat).withColumnRenamed("prediction", "cell"), model)

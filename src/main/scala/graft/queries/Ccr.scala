@@ -1168,7 +1168,7 @@ object Ccr {
     "q141_corep_c34",
     (s, dir) => {
       val ns = ccrNettingSets(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(graft.SessionScope.persist)
       val nulld = "CAST(NULL AS DOUBLE)"
       val c3401 = ns.agg(
         dsum(col("ead_ccr"), 2).as("ead_all"),
@@ -1293,7 +1293,7 @@ object Ccr {
         // so without the persist the lineitem scan + trade aggregation
         // execute TWICE (guide §2.4 — the q98/q93 shared-edge pattern).
         // At 100 TB that is a second full pass over the trade book.
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(graft.SessionScope.persist)
       val routed = trades.withColumn("result_ns",
         when(col("is_specific_wwr"),
           concat(col("source_ns"), lit("__wwr__"), col("trade_id")))

@@ -124,7 +124,7 @@ object Corep09 {
           dsum(col("rwa_pre_sf"), 2).as("c0080"),
           dsum(col("rwa_pre_sf") - col("rwa"), 2).as("c0081"),
           dsum(col("rwa"), 2).as("c0090"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(graft.SessionScope.persist)
       val allSheet = rolled.groupBy(col("row_ref")).agg(
           sum(col("n_rows")).as("n_rows"),
           dsum(col("c0010"), 2).as("c0010"),
@@ -336,7 +336,7 @@ object Corep09 {
         // stage and the persist only re-buys its cost (the r19 attempt,
         // reverted then as a measured regression).
         .coalesce(1)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(graft.SessionScope.persist)
       val allSheet = rolled.groupBy(col("row_ref")).agg(
           sum(col("n_rows")).as("n_rows"),
           dsum(col("c0010"), 2).as("c0010"),

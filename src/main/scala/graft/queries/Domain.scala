@@ -382,7 +382,7 @@ object Domain {
         .groupBy(col("exposure_class"))
         .agg(dsum(col("rwa"), 2).as("rwa_base_m"),
              dsum(col("rwa_b31"), 2).as("rwa_cand_m"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(graft.SessionScope.persist)
       val base = runs.select(col("exposure_class"), col("rwa_base_m").as("rwa"))
       val cand = runs.select(col("exposure_class"), col("rwa_cand_m").as("rwa"))
       val recon = Comparison.compareRuns(
@@ -759,7 +759,7 @@ object Domain {
         categoricals = Seq(CategoricalComponent("exposure_class", valueMap = Seq(
           "CORP" -> "CORPORATE", "RET" -> "RETAIL",
           "SOV" -> "SOVEREIGN", "INST" -> "INSTITUTION"))))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(graft.SessionScope.persist)
       val summaryRows = recon.groupBy(col("row_bucket")).agg(
           count(lit(1)).as("n"),
           count(when(col("ead_bucket") === "break", lit(1))).as("n_ead_break"),
@@ -1601,7 +1601,7 @@ object Domain {
         .select(col("o_orderkey"), col("o_totalprice"),
           col("alloc.pool_reference").as("pool_reference"),
           q2(col("o_totalprice") * col("alloc.allocation_pct")).as("allocated_ead"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(graft.SessionScope.persist)
       val perPool = exploded.groupBy(col("pool_reference"))
         .agg(count(lit(1)).as("n"), dsum(col("allocated_ead"), 2).as("total_allocated"))
         .select(lit("pool").as("section"), col("pool_reference").as("ref"),
@@ -1701,7 +1701,7 @@ object Domain {
       // frame stays fully parallel (coalesce is narrow, it only merges
       // the final-agg read side).
       val cells = Transition.cells(j).coalesce(1)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(graft.SessionScope.persist)
       val matrix = Transition.matrixFromCells(cells).select(
         lit("matrix").as("section"), col("class_from"), col("class_to"),
         col("n"), col("opening_measure").as("opening"),
@@ -2275,8 +2275,8 @@ object Domain {
   val q115Tieouts = QueryDef(
     "q115_tieouts",
     (s, dir) => {
-      val led = DomainPipeline.ledger(s, dir)
-      graft.reporting.Tieouts.fromLedger(led, DomainPipeline.summarise(led))
+      graft.reporting.Tieouts.fromLedger(
+        DomainPipeline.ledger(s, dir), DomainPipeline.summary(s, dir))
     },
     Some {
       val ncValues = graft.reporting.Tieouts.nonComparable
@@ -3283,11 +3283,11 @@ object Domain {
       // (guide §2.4).
       val cpty = DomainPipeline.counterparties(s, dir)
         .filter(col("parent_group") === entity)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(graft.SessionScope.persist)
       val exp = DomainPipeline.exposuresUnified(s, dir)
         .join(cpty.select("counterparty_reference"),
           Seq("counterparty_reference"), "semi")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(graft.SessionScope.persist)
       val expKeys = exp.select("exposure_reference")
       val coll = DomainPipeline.collateral(s, dir)
         .join(expKeys, Seq("exposure_reference"), "semi")

@@ -1504,7 +1504,7 @@ object LlmOps {
           bm25Terms.map(t =>
             expr(s"size(filter(toks, x -> x = '$t'))").cast("double")
               .as(s"tf_$t")): _*)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(graft.SessionScope.persist)
       val statCols =
         Seq(count(lit(1)).cast("double").as("n_docs"),
           dsum(col("dl"), 0).as("sum_dl")) ++
@@ -1980,7 +1980,7 @@ object LlmOps {
         // deterministic within-cluster rank: the pair-cap's join key
         .withColumn("rk", row_number().over(
           Window.partitionBy(col("cluster")).orderBy(col("vec_id"))))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(graft.SessionScope.persist)
       // rank-window pair generation: each vector explodes to its W
       // successor ranks and equi-joins back — candidates ≤ N·W, never a
       // within-cluster all-pairs (vec_id is unique post-scorable and rk

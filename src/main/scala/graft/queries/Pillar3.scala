@@ -403,6 +403,9 @@ object Pillar3 {
       ORDER BY framework, exposure_class
     """.stripMargin.trim))
 
+  /** The bundle name of [[ccrComponents]]. */
+  private[graft] val CcrComponents = "ccr_components"
+
   /** The non-ledger RWEA scalars OV1 and CMS1 report, each an existing
     * battery query reduced to one value: q56's SA-CCR netting-set add-ons
     * × α (1.4), q105's default-fund K_CM × 12.5, q96's reduced BA-CVA RWA
@@ -411,7 +414,7 @@ object Pillar3 {
     * so the second sheet reads the first one's result and
     * `TemplateBundle.releaseSession` frees it with the session's sheets. */
   private[graft] def ccrComponents(s: SparkSession, dir: String): DataFrame =
-    graft.reporting.TemplateBundle.generated(s, dir, "ccr_components", {
+    graft.reporting.TemplateBundle.generated(s, dir, CcrComponents, {
       val ccr = Ccr.q56SaCcrAddon.build(s, dir)
         .agg(dsum(q2(col("ns_addon") * 1.4), 2).as("ccr_rwea"))
       val dfund = Ccr.q105DefaultFund.build(s, dir)

@@ -1,6 +1,5 @@
 package graft.reporting
 
-import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The run's generated-template bundle (reference
@@ -19,64 +18,32 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * sheet build. A template's own QueryDef keeps building its sheet
   * fresh, so the driver's per-query benches measure real production cost;
   * the one exception is the CCR components OV1 and CMS1 share
-  * (`Pillar3.ccrComponents`), which both sheets read from here. A harness
-  * that runs those sheets repeatedly in one session without
-  * [[releaseSession]] times them without the components after the first
-  * build: `graft.Bench`'s timed rounds of q130 and q132 follow a warmup
-  * in the same session, so they leave out q56, q105, q96 and q97.
+  * (`Pillar3.ccrComponents`), which both sheets read from here. The
+  * bundle is a set of [[graft.SessionScope]] memos: a run store or
+  * harness that closes a session releases it with [[releaseSession]],
+  * and `graft.Bench` drops the CCR components' entry ([[key]]) before
+  * each timed round of q130 and q132, so those rounds time q56, q105, q96
+  * and q97 as part of the sheet.
   */
 object TemplateBundle {
 
-  private type Entry = (org.apache.spark.sql.types.StructType,
-    java.util.List[org.apache.spark.sql.Row])
-
-  // Lazy-holder memo: TrieMap.getOrElseUpdate is NOT atomic for the
-  // by-name build (two concurrent first readers would both collect the
-  // sheet), so the map holds a lazy cell installed with the atomic
-  // putIfAbsent — exactly one caller's thunk runs, later callers block
-  // on the holder's lazy initialiser instead of re-building.
-  private val memo = scala.collection.concurrent.TrieMap[
-    (SparkSession, String, String), Lazy[Entry]]()
-
-  private final class Lazy[A](thunk: () => A) { lazy val value: A = thunk() }
-
-  // one release hook per SparkContext: collected sheets die with the app,
-  // so harnesses that cycle sessions cannot accumulate every session's
-  // rows. The hook holds the context, never a session: a listener per
-  // session grew the listener bus by one per session and kept every
-  // session reachable from it.
-  private val hooked = java.util.Collections.synchronizedSet(
-    java.util.Collections.newSetFromMap(
-      new java.util.WeakHashMap[SparkContext, java.lang.Boolean]()))
-
-  private def hookRelease(s: SparkSession): Unit = {
-    val sc = s.sparkContext
-    if (hooked.add(sc))
-      sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-          memo.keys.filter(_._1.sparkContext eq sc).foreach(memo.remove)
-      })
-  }
+  /** The scope key of template `name`'s entry. */
+  private[graft] def key(name: String): Any = ("template", name)
 
   /** The generated frame for `name`, building (and collecting) it on
     * first use per (session, dir) — concurrent first readers build once. */
   def generated(s: SparkSession, dir: String, name: String,
       build: => DataFrame): DataFrame = {
-    hookRelease(s)
-    val key = (s, dir, name)
-    val holder = new Lazy[Entry]({ () =>
+    val (schema, rows) = graft.SessionScope.memo(s, dir, key(name)) {
       val df = build
       (df.schema, java.util.Arrays.asList(df.collect(): _*))
-    })
-    val cell = memo.putIfAbsent(key, holder).getOrElse(holder)
-    val (schema, rows) = cell.value
+    }
     s.createDataFrame(rows, schema)
   }
 
-  /** Drop every entry memoised for `session` — called when a run store
-    * or test harness closes a session, so collected sheets do not
-    * outlive it. */
+  /** Release everything memoised for `session` — called when a run store
+    * or test harness closes a session, so collected sheets, scan frames
+    * and the ledger do not outlive it. */
   def releaseSession(session: SparkSession): Unit =
-    memo.keys.filter(_._1 eq session).foreach(memo.remove)
+    graft.SessionScope.release(session)
 }

@@ -42,21 +42,20 @@ object Tieouts {
     * non-comparable rows). The CRM conservation tie's tolerance scales
     * with the book (one cent per exposure — the waterfall legs are
     * cent-rounded per exposure). */
-  def fromLedger(led: DataFrame, summary0: DataFrame): DataFrame = {
+  def fromLedger(led: DataFrame, summary: DataFrame): DataFrame = {
     val s = led.sparkSession
     import s.implicits._
 
-    // Three independent reshapes of the same sealed ledger. Each tiny
-    // artifact is persisted: the ties consume each one several times
-    // (totals + per-class joins), and without the persist every consumer
-    // re-runs its aggregation over the full ledger (measured ~8 ledger
-    // scans → 4 at sf0.1). MEMORY_AND_DISK, session-managed, and ≤ a few
-    // dozen rows each.
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    // Three independent reshapes of the same sealed ledger. The ties
+    // consume the sheet and the summary several times each (totals +
+    // per-class joins), and unpersisted every consumer re-runs its
+    // aggregation over the full ledger (measured ~8 ledger scans → 4 at
+    // sf0.1). The sheet is persisted here as a query frame
+    // (graft.SessionScope); `summary` is the caller's, persisted by its
+    // owner (q115 passes the ledger memo's summary). A few dozen rows each.
     val sheet = led.groupBy(col("exposure_class")).agg(
       dsum(col("ead_pre_crm"), 2).as("sheet_ead"),
-      dsum(col("rwa"), 2).as("sheet_rwa")).persist(lvl)
-    val summary = summary0.persist(lvl)
+      dsum(col("rwa"), 2).as("sheet_rwa")).transform(graft.SessionScope.persist)
     val ov1 = led.groupBy(col("approach")).agg(
       dsum(col("rwa"), 2).as("ov1_rwa"))
 

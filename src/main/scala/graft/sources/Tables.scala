@@ -46,20 +46,19 @@ object Tables {
       "l_returnflag" -> StringType, "l_linestatus" -> StringType,
       "l_shipdate" -> TimestampNTZType))
 
-  /** Memoised scan frames: `spark.read.parquet` re-resolves the file index
-    * on EVERY call (ResolveDataSource measured 1.7 s of a cold ledger build
-    * across ~10 reads), and every caller then re-analyses an identical
-    * scan subtree. A DataFrame is immutable, so
-    * handing back the same object is free sharing — same discipline as the
-    * reference's one-loader-instance-per-run (`engine/loader.py:814-876`). */
-  private val memo =
-    scala.collection.concurrent.TrieMap[(SparkSession, String, String), DataFrame]()
-
+  /** The scan frame of one table, a session memo ([[graft.SessionScope]]):
+    * `spark.read.parquet` re-resolves the file index on EVERY call
+    * (ResolveDataSource measured 1.7 s of a cold ledger build across ~10
+    * reads), and every caller then re-analyses an identical scan subtree.
+    * A DataFrame is immutable, so handing back the same object is free
+    * sharing — the reference's one-loader-instance-per-run
+    * (`engine/loader.py:814-876`). The frame holds no cached blocks; it
+    * goes with its session or its data dir. */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    memo.getOrElseUpdate((spark, sfDir, name), {
+    graft.SessionScope.memo(spark, sfDir, ("table", name)) {
       val reader = schemas.get(name).fold(spark.read)(spark.read.schema)
       reader.parquet(s"$sfDir/$name.parquet")
-    })
+    }
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")

@@ -6,19 +6,17 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The shipped `bench_priors.json` resource must never be LOOSER than
-  * the official `BENCH_r*.json` artifacts it is generated from — the
-  * r18 failure was exactly a stale (loose) prior map letting contended
-  * rows clear their fork thresholds unadjudicated. This spec recomputes
-  * the per-query running min from the artifacts independently of
-  * `tools/gen_bench_priors.py` (same semantics, second implementation —
-  * a generator bug and a spec bug would have to agree to slip through)
-  * and fails on any entry above it. Resets beyond the documented
-  * semantics-change list are rejected too: an undocumented reset is the
-  * other way to loosen a threshold.
+/** The priors `graft.Bench` derives at start ([[BenchPriors.load]]) must
+  * EQUAL the per-query running min of the official `BENCH_r*.json`
+  * artifacts — the r18 failure was exactly a stale (loose) prior map
+  * letting contended rows clear their fork thresholds unadjudicated. This
+  * spec recomputes the min from the artifacts independently of
+  * `BenchPriors` (same semantics, second implementation — a loader bug
+  * and a spec bug would have to agree to slip through), with the
+  * documented era cutoff and semantics-reset list.
   */
 class BenchPriorsSpec extends AnyFunSuite {
-  private val repo = sys.env.getOrElse("GRAFT_REPO", "/root/repo")
+  private val repo = sys.env.getOrElse("GRAFT_REPO", ".")
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper
 
   private def qnum(name: String): String =
@@ -40,21 +38,19 @@ class BenchPriorsSpec extends AnyFunSuite {
     }
   }
 
-  test("shipped priors <= artifact running min; resets only from the documented list") {
+  test("derived priors = artifact running min, with the documented resets") {
     val files = Option(new File(repo).listFiles()).toSeq.flatten
       .filter(_.getName.matches("BENCH_r\\d+\\.json"))
       .sortBy(f => "\\d+".r.findFirstIn(f.getName).get.toInt)
     assume(files.nonEmpty, s"no BENCH artifacts under $repo")
-    val shipped = BenchPriors.load()
-    val resets = BenchPriors.loadResets()
-    assert(resets.toSet.subsetOf(BenchPriors.documentedResets.toSet),
-      s"undocumented semantics resets in bench_priors.json: " +
-        s"${resets.toSet.diff(BenchPriors.documentedResets.toSet)}")
-    // the era cutoff is itself a loosening lever — it must be exactly
-    // the documented one, not quietly raised to drop inconvenient rounds
-    val era = BenchPriors.loadEraStart()
-    assert(era == BenchPriors.documentedEraStart,
-      s"era_start $era != documented ${BenchPriors.documentedEraStart}")
+    val resets = BenchPriors.documentedResets
+    val era = BenchPriors.documentedEraStart
+    // the era cutoff and the reset list are loosening levers: a raised
+    // cutoff or an extra reset drops inconvenient rounds, so both are
+    // pinned to their documented values
+    assert(era == 11, s"era cutoff $era")
+    assert(resets == Map("61" -> 17, "62" -> 17, "65" -> 17, "78" -> 18,
+      "99" -> 19, "119" -> 19), s"semantics resets $resets")
     val min = scala.collection.mutable.Map.empty[String, Int]
     var parseable = 0
     for (f <- files) {
@@ -77,16 +73,11 @@ class BenchPriorsSpec extends AnyFunSuite {
       }
     }
     assert(parseable >= 8, s"only $parseable parseable artifacts — parsing regressed?")
-    val loose = min.toSeq.collect {
-      case (q, m) if shipped.getOrElse(q, Int.MaxValue) > m =>
-        s"q$q shipped ${shipped.get(q)} > artifact min $m"
+    val derived = BenchPriors.load(new File(repo))
+    val differ = (min.keySet ++ derived.keySet).toSeq.collect {
+      case q if derived.get(q) != min.get(q) =>
+        s"q$q derived ${derived.get(q)} != artifact min ${min.get(q)}"
     }
-    assert(loose.isEmpty,
-      s"bench_priors.json is looser than the artifacts (run " +
-        s"tools/gen_bench_priors.py): ${loose.sorted.mkString("; ")}")
-    // and it must actually cover the artifact estate — an empty or
-    // truncated resource would trivially pass the looseness check
-    val uncovered = min.keySet.diff(shipped.keySet)
-    assert(uncovered.isEmpty, s"priors missing for: $uncovered")
+    assert(differ.isEmpty, differ.sorted.mkString("; "))
   }
 }

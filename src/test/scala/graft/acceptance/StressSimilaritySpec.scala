@@ -133,7 +133,7 @@ object SimilarityStress {
         s"near-dup recall $nearFound/$nBlocks under the 8x16 banding floor")
       r
     }
-    Similarity.releaseScorables()
+    graft.SessionScope.endQuery(spark)
     spark.catalog.clearCache()
 
     // ---- stage 3: k-means IVF train + assign (the spark.ml production
@@ -171,7 +171,7 @@ object SimilarityStress {
       (res4.count(), res4.queryExecution.executedPlan.toString)
     }
     assignments0.unpersist()
-    Similarity.releaseScorables()
+    graft.SessionScope.endQuery(spark)
     spark.catalog.clearCache()
 
     // ---- stage 5: PQ code + ADC score (q119's shape at scale: codes by
@@ -209,7 +209,7 @@ object SimilarityStress {
       top.unpersist()
       (n, plan)
     }
-    Similarity.releaseScorables()
+    graft.SessionScope.endQuery(spark)
     spark.catalog.clearCache()
 
     // ---- stage 6: sign-bit IVF (q65's engine-portable tier) at a
@@ -228,7 +228,7 @@ object SimilarityStress {
       res.unpersist()
       (n, plan)
     }
-    Similarity.releaseScorables()
+    graft.SessionScope.endQuery(spark)
     spark.catalog.clearCache()
     probe.telemetry
   }
